@@ -3,7 +3,8 @@
 Each sub-module defines ``QUERIES: dict[name, QuerySpec]`` where a QuerySpec
 couples one Spark query callable ``(spark, sf_dir) -> DataFrame`` with its
 DuckDB oracle SQL twin (``None`` for non-SQL-expressible, rows-only ops).
-``__spark_entry__.py`` re-exports the merged registry.
+``__spark_entry__.py`` re-exports the merged registry, in module
+discovery order (:func:`_merged`).
 
 Determinism rules every spec follows (SURVEY.md §2L cautions):
 * alias every computed column identically in Spark and SQL;
@@ -17,6 +18,7 @@ Determinism rules every spec follows (SURVEY.md §2L cautions):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -31,6 +33,19 @@ class QuerySpec:
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
 
 
+_CORE = ("scans", "aggregates", "joins", "windows", "extensions")
+
+
+def _order(name: str) -> tuple[int, int, str]:
+    """Sort key of a contract module name (see :func:`_merged`)."""
+    if name in _CORE:
+        return (0, _CORE.index(name), name)
+    m = re.fullmatch(r"surface(\d*)", name)
+    if m:
+        return (1, int(m.group(1) or 1), name)
+    return (2, 0, name)
+
+
 def _merged() -> dict[str, QuerySpec]:
     """Merge every contract surface module's ``QUERIES`` dict.
 
@@ -38,28 +53,17 @@ def _merged() -> dict[str, QuerySpec]:
     is registration enough — no hand-kept import list to forget.  Merge
     order is deterministic: the five core modules first (historic
     order), then ``surfaceN`` by numeric suffix, then anything else
-    alphabetically.  Order only matters for pre-rotation dict layout;
-    the external head is pinned explicitly in ``_ROUND_HEAD``.
+    alphabetically; within a module, its ``QUERIES`` order.  A key
+    defined twice raises.
     """
     import importlib
     import pkgutil
-    import re as _re
 
-    core = ("scans", "aggregates", "joins", "windows", "extensions")
-    discovered = sorted(
+    discovered = (
         name
         for _, name, _ in pkgutil.iter_modules(__path__)
         if not name.startswith("_")
     )
-
-    def _order(name: str) -> tuple[int, int, str]:
-        if name in core:
-            return (0, core.index(name), name)
-        m = _re.fullmatch(r"surface(\d*)", name)
-        if m:
-            return (1, int(m.group(1) or 1), name)
-        return (2, 0, name)
-
     merged: dict[str, QuerySpec] = {}
     for name in sorted(discovered, key=_order):
         mod = importlib.import_module(f"{__name__}.{name}")
@@ -70,373 +74,7 @@ def _merged() -> dict[str, QuerySpec]:
         if overlap:
             raise ValueError(f"duplicate query keys: {overlap}")
         merged.update(queries)
-    return _rotate(merged)
-
-
-# The external harness verifies only the FIRST 50 registered queries per
-# round, so registration order decides what gets an external correctness
-# row.  Rotation policy: queries externally verified in a past round move
-# to the back (they stay covered by the full-registry run_parity.py gate);
-# never-verified queries move up, with a curated head so the highest-value
-# targets are guaranteed slots.  Round-5 head: the 20 keys that have never
-# had an external row (VERDICT r4 ask #2), the re-pinned oracle-upgraded
-# keys whose STRICTER oracles have never been externally exercised
-# (ask #3/#4 — the rotation's old blind spot: a rows-only pass in r3
-# counted as "done" even after the key gained a real hash oracle), the
-# repaired agg_approx_percentile (the one red r4 row), and the new
-# round-5 batches.
-_ROUND_HEAD: tuple[str, ...] = (
-    # the one externally-RED r4 row, repaired (scalar approx_p50/p95)
-    "agg_approx_percentile",
-    # 20 never-externally-verified keys (batches 30/32/33/34 + ewma-exact)
-    "agg_corr_matrix", "window_cume_dist", "agg_bitmask_states",
-    "scan_zorder_prune", "window_rolling_minmax", "embed_norm_hist",
-    "scan_hive_partition_prune", "setop_except_all",
-    "event_attribution_last_touch", "sink_compact_files",
-    "scan_csv_quoted_multiline", "agg_week_rollup", "stream_dedup_firstwins",
-    "agg_bool_every_any", "hof_exists_forall", "hof_arrays_zip",
-    "agg_min_max_by", "window_pct_change", "str_regexp_extract_all",
-    "udaf_grouped_ewma_exact",
-    # re-pinned: oracle upgraded after their last external row — the new,
-    # stricter oracle needs its own external exercise (_REPIN_MIN_ROUND
-    # keeps them in the head until a round >= 5 report confirms green)
-    "sim_topk_cosine_ivf", "scan_binaryfile", "pipeline_referee",
-    "dedup_near_minhash", "anomaly_mad_robust",
-    # batch-35 (new in round 5) — pinned so each gets an external row in
-    # its first round of existence
-    "event_funnel_conversion", "event_retention_cohort",
-    "window_rolling_median", "str_levenshtein_block", "embed_centroid_dist",
-    # batch-36 (new in round 5) — pinned likewise
-    "join_bucketed_colocate", "agg_hll_portable", "agg_mode_deterministic",
-    "sample_pair_negatives", "text_containment_ngram",
-    # batch-37 (new in round 5) — pinned likewise
-    "event_anomaly_cusum", "window_exp_decay_sum", "agg_bloom_portable",
-    "dedup_minhash_jaccard_est", "agg_kmv_distinct",
-    # batch-38 (new in round 5) — pinned likewise
-    "join_point_in_time", "agg_log2_histogram", "event_interarrival_median",
-    "text_zipf_slope", "window_peak_local_max",
-    # batch-39 (new in round 5) — fills the head-50 exactly
-    "window_drawdown_max", "agg_kmv_intersection", "event_dow_profile",
-    "str_url_canonicalize",
-    # batch-40 (new in round 5) — overflow slots 51+: these cannot get an
-    # external row this round (the harness checks the first 50), but
-    # pinning them keeps their priority ahead of the rotated backlog so
-    # they auto-promote into the r6 head as round-5 keys retire
-    "event_pattern_regex", "event_rfm_scores", "agg_gini_concentration",
-    "event_survival_km", "str_ipv4_aggregate",
-    # batch-41 (new in round 5) — overflow slots likewise
-    "event_cooccurrence_pmi", "window_winsorize_clip",
-    "text_split_doc_stitch", "agg_skew_kurt", "sql_any_all_semijoin",
-    # re-pinned round 6: oracle upgraded rows-only → hash (VERDICT r5
-    # asks #3/#4) — the stricter oracle needs its own external row
-    "dedup_simhash", "udtf_explode_matches",
-    # batch-42 (new in round 6) — pinned so each gets an external row in
-    # its first round of existence
-    "str_base64_roundtrip", "str_initcap_title", "str_translate_sub",
-    "str_pad_fixed_width", "sql_not_in_null_semantics",
-    # batch-43 (new in round 6) — pinned likewise
-    "agg_harmonic_mean", "agg_trimmed_mean", "agg_weighted_median",
-    "event_user_type_entropy", "sql_grouping_id",
-    # batch-44 (new in round 6) — pinned likewise
-    "event_stickiness_dau_wau", "event_bounce_rate",
-    "event_new_vs_returning", "event_hour_heatmap", "event_streak_longest",
-    # batch-45 (new in round 6) — pinned likewise
-    "hof_reduce_weighted", "map_group_entries", "array_setops_sorted",
-    "window_ratio_to_report", "graph_degree_distribution",
-    # batch-46 (new in round 6) — pinned likewise
-    "dedup_prefix_truncation", "text_trigram_diversity",
-    "text_vocab_growth", "embed_dim_stats_exact", "embed_nearest_centroid",
-    # batch-47 (new in round 6) — pinned likewise
-    "sink_dynamic_partition_overwrite", "scan_tsv_gzip",
-    "stream_hopping_counts", "agg_geometric_mean", "join_values_inline_dim",
-    # batch-48 (new in round 6) — pinned likewise (head-50 = 12 carry-over
-    # + 35 new keys + 3 rotated-backlog slack)
-    "text_bm25_score", "text_kwic_context", "text_inverted_postings",
-    "sample_poisson_bootstrap", "event_order_gap_stats",
-    # batch-49 (new in round 6) — overflow slots 51+ (the harness checks
-    # the first 50): pinned so they auto-promote into round 7's head as
-    # round-6 keys retire, exactly the r5 batch-40/41 pattern
-    "event_growth_accounting", "text_js_divergence",
-    "text_length_outliers_iqr", "sample_balance_downsample",
-    "scan_csv_permissive_dlq",
-    # batch-50 (new in round 6) — overflow slots likewise
-    "text_doc_surprisal_unigram", "str_hex_unhex_roundtrip",
-    "array_flatten_nested", "agg_quarter_rollup", "embed_zscore_outlier",
-    # batch-51 (new in round 6) — overflow slots likewise
-    "event_cohort_ltv", "event_feature_assembly",
-    "agg_variance_merge_proof", "str_from_csv_parse", "audit_fk_orphans",
-    # batch-52 (new in round 6) — overflow slots likewise
-    "window_tumbling_15min", "scan_json_nested_explode",
-    "sql_cte_share_of_total",
-    "window_rank_variants", "event_ab_test_lift",
-    # batch-53 (new in round 6) — overflow slots likewise
-    "text_collocation_llr", "text_quality_composite_gate",
-    "dedup_embed_exact", "sample_balance_upsample", "scan_text_wholefile",
-    # batch-54 (new in round 6) — overflow slots likewise
-    "window_range_value_frame", "agg_bitwise_ops", "text_affix_freq",
-    "join_dim_grid_fill", "setop_intersect_all",
-    # batch-55 (new in round 6) — overflow slots likewise
-    "dedup_simhash_hamming", "event_forecast_dow_naive",
-    "str_printf_render", "window_lag_offset_default",
-    "event_path_to_purchase",
-    # batch-56 (new in round 6) — overflow slots likewise (completes
-    # TPC-H: all 22 queries now implemented + oracled)
-    "tpch_q13_cust_distribution", "tpch_q17_small_qty_revenue",
-    "event_attribution_linear", "audit_table_checksum",
-    "text_greedy_wrap_lines",
-    # batch-57 (new in round 6) — overflow slots likewise
-    "str_parse_url_parts", "array_explode_outer_null",
-    "date_business_days", "text_rake_phrases", "setop_union_by_name",
-    # batch-58 (new in round 6) — overflow slots likewise
-    "embed_lsh_hyperplane", "graph_bipartite_jaccard",
-    "event_forecast_moving_avg", "text_chao1_richness",
-    "event_funnel_time_bounded",
-    # batch-59 (new in round 6) — overflow slots likewise
-    "sink_csv_quoting_roundtrip", "sample_stratified_topn",
-    "event_sequence_trigrams", "date_iso_week_boundary",
-    "sql_relational_division",
-    # batch-60 (new in round 6) — overflow slots likewise
-    "agg_hll_intersection", "scan_csv_multichar_delim",
-    "date_month_end_rollup", "event_concurrent_intervals_max",
-    "sql_pivot_dynamic",
-    # batch-61 (new in round 6) — overflow slots likewise
-    "agg_sum_distinct", "sample_rendezvous_hash",
-    "embed_prefix_topk_overlap", "event_error_rate_wilson",
-    "multimodal_image_ahash",
-    # batch-62 (new in round 6) — overflow slots likewise
-    "scan_fixed_width_file", "date_nth_weekday_of_month",
-    "str_phonetic_key", "unpivot_multi_measure", "agg_weighted_mean",
-    # batch-63 (new in round 6) — overflow slots likewise
-    "graph_bfs_2hop", "multimodal_audio_frame_rms",
-    "scan_recursive_glob", "scan_ignore_corrupt_files",
-    "event_interval_union_time",
-    # batch-64 (new in round 6) — overflow slots likewise
-    "scan_manifest_subset", "date_fiscal_year_rollup",
-    "audit_benford_first_digit", "event_ab_srm_check", "embed_pq_encode",
-    # batch-65 (new in round 6) — overflow slots likewise
-    "embed_pq_adc_topk", "text_vocab_drift_topk",
-    "window_weighted_moving_avg", "sink_parquet_zstd_roundtrip",
-    "date_sla_buckets",
-    # batch-66 (new in round 6) — overflow slots likewise
-    "agg_bitmap_distinct", "stream_late_drop_replay",
-    "str_luhn_checksum", "event_type_runs_rle", "agg_hhi_concentration",
-    # batch-67 (new in round 6) — overflow slots likewise
-    "sample_split_leakage_safe", "agg_month_yoy_delta",
-    "join_full_outer_reconcile", "text_stopword_discovery",
-    "window_minmax_scale",
-    # batch-68 (new in round 6) — overflow slots likewise
-    "join_value_band_bucketed", "event_burst_detection",
-    "multimodal_pixel_histogram", "date_fixed_offset_display",
-    "text_positional_token_stats",
-    # batch-69 (new in round 6) — overflow slots likewise
-    "window_bollinger_bands", "agg_hll_error_calibration",
-    "date_easter_computus", "graph_degree_assortativity",
-    "sink_append_idempotent_log",
-    # batch-70 (new in round 6) — overflow slots likewise
-    "window_holt_smoothing_recursive", "scan_csv_comment_lines",
-    "event_seasonal_strength", "multimodal_audio_zero_crossings",
-    "event_retention_dn",
-    # batch-71 (new in round 6) — overflow slots likewise
-    "sql_named_window_reuse", "text_readability_proxy",
-    "scan_html_table_regex", "embed_metric_rank_correlation",
-    "agg_decade_histogram",
-    # batch-72 (new in round 6) — overflow slots likewise
-    "window_kadane_max_subarray", "window_rsi_relative_strength",
-    "agg_freq_of_freq", "text_skipgram_pairs", "window_vwap_running",
-    # batch-73 (new in round 6) — overflow slots likewise
-    "multimodal_image_tile_means", "text_vocab_lcp_compression",
-    "graph_link_predict_common_neighbors", "sample_recency_halflife",
-    "date_calendar_445_rollup",
-    # batch-74 (new in round 6) — overflow slots likewise
-    "event_concurrency_duration_histogram", "embed_knn_graph_octant",
-    "sink_sorted_clustered_write", "scan_path_date_partition",
-    "date_julian_day_number",
-    # batch-75 (new in round 6) — overflow slots likewise
-    "event_autocorr_lag1", "text_vocab_coverage_curve",
-    "multimodal_audio_silence_trim", "date_business_days_holiday_aware",
-    "scan_parquet_decimal_exact",
-    # batch-76 (new in round 6) — overflow slots likewise
-    "sql_scalar_udf_create", "window_hampel_filter",
-    "scan_file_skipping_stats", "date_leap_day_audit",
-    "graph_hits_two_rounds",
-    # batch-77 (new in round 6) — overflow slots likewise
-    "multimodal_image_edge_energy", "graph_kcore_two_pass",
-    "event_markov_two_step", "agg_simpson_rate_audit",
-    "agg_lorenz_deciles",
-    # batch-78 (new in round 6) — overflow slots likewise
-    "multimodal_audio_peak_count", "udtf_overlap_chunks",
-    "hof_map_filter_values", "subq_correlated_scalar_avg",
-    "udaf_longest_increasing_run",
-    # batch-79 (new in round 6) — overflow slots likewise
-    "anomaly_seasonal_residual_iqr", "audit_schema_contract_check",
-    "sessionize_dwell_time", "agg_pareto_front_2d",
-    "scan_csv_null_literals",
-    # batch-80 (new in round 6) — overflow slots likewise
-    "event_alert_debounce", "scan_txn_log_table",
-    "audit_snapshot_cdc_diff", "text_bpe_pair_counts",
-    "sql_execute_immediate_param",
-    # batch-81 (new in round 6) — overflow slots likewise
-    "window_gap_fill_interpolate", "sql_declare_variables",
-    "graph_clustering_coeff_topk", "event_wape_forecast_error",
-    "multimodal_image_symmetry_score",
-    # batch-82 (new in round 6) — overflow slots likewise
-    "embed_octant_recall_eval", "event_did_estimator",
-    "text_kn_continuation_counts", "date_schedule_expansion",
-    "agg_winsorized_mean",
-    # batch-83 (new in round 6) — overflow slots likewise
-    "scan_binary_packed_records", "event_attribution_shapley",
-    "event_path_sankey_edges", "multimodal_audio_downsample_2x",
-    "sql_join_strategy_hints",
-    # batch-84 (new in round 6) — overflow slots likewise
-    "embed_knn_classifier_eval", "sample_hard_negatives",
-    "str_to_number_format", "sql_group_by_all_sugar",
-    "date_add_months_eom_semantics",
-    # batch-85 (new in round 6) — overflow slots likewise
-    "window_underwater_duration", "event_type_user_jaccard",
-    "graph_greedy_walk_3steps", "multimodal_video_scene_cuts",
-    "str_char_class_histogram",
-    # batch-86 (new in round 6) — overflow slots likewise
-    "embed_two_centroid_split", "text_anagram_classes",
-    "scan_multiline_log_records", "event_fraud_velocity_rule",
-    "sql_star_except_exclude",
-    # batch-87 (new in round 6) — overflow slots likewise
-    "scan_zip_archive_members", "text_word_burstiness",
-    "sql_try_arithmetic_nulls", "event_first_purchase_rank",
-    "audit_column_profile",
-    # batch-88 (new in round 6) — overflow slots likewise
-    "stream_tumbling_topk", "hof_array_prefix_scan",
-    "multimodal_image_hist_equalization", "event_spend_threshold_crossing",
-    "agg_rollup_count_distinct",
-    # batch-89 (new in round 6) — overflow slots likewise
-    "date_partition_backfill_plan", "json_props_numeric_stats",
-    "embed_behavior_user_similarity", "str_confusable_fold",
-    "event_pre_post_paired_terms",
-    # batch-90 (new in round 6) — overflow slots likewise
-    "sql_view_chain_inlining", "event_active_day_gap_histogram",
-    "join_role_playing_date_dim", "date_proration_split",
-    "scan_txn_log_time_travel",
-    # batch-91 (new in round 6) — overflow slots likewise
-    "join_reconcile_tolerance", "str_iso_duration_parse",
-    "sample_time_group_split_audit", "window_clamped_running_balance",
-    "scan_csv_crlf_endings",
-    # batch-92 (new in round 6) — overflow slots likewise
-    "agg_budget_apportionment", "scan_nested_struct_prune",
-    "sql_agg_filter_clause", "multimodal_image_projection_peak",
-    "event_rule_score_matrix",
-    # batch-93 (new in round 6) — overflow slots likewise
-    "audit_order_line_consistency", "text_prefix_autocomplete_topk",
-    "sql_nulls_ordering_pinned", "scan_file_inventory",
-    "window_runs_test_terms",
-    # batch-94 (new in round 6) — overflow slots likewise
-    "sql_qualify_dialect_pair", "hof_map_zip_with_merge",
-    "window_best_split_point", "text_tokenizer_fertility",
-    "str_group_medoid",
-    # batch-95 (new in round 6) — overflow slots likewise
-    "join_bridge_weighted_allocation", "scan_parquet_int96_legacy",
-    "sink_csv_formula_sanitize", "agg_band_migration_matrix",
-    "multimodal_image_border_contrast",
-    # batch-96 (new in round 6) — overflow slots likewise
-    "scan_csv_latin1_charset", "join_accumulating_snapshot",
-    "date_epoch_unit_audit", "str_json_escape_roundtrip",
-    "sink_write_with_manifest",
-    # batch-97 (new in round 6) — overflow slots likewise
-    "dedup_chunk_exact", "sample_rolling_origin_folds",
-    "join_fx_conversion_daily", "window_recovery_time_days",
-    "multimodal_audio_loudest_window",
-)
-
-# A key listed here stays in the head until a green external row from a
-# round >= its value (default 2 for everything else).  Used to re-pin
-# keys whose oracle was upgraded AFTER an earlier green row: the old
-# row proved the weaker check, not the current one.
-_REPIN_MIN_ROUND: dict[str, int] = {
-    "sim_topk_cosine_ivf": 5,   # rows-only green r3; hash oracle added r4
-    "scan_binaryfile": 5,       # rows-only green r1; read_blob oracle r5
-    "pipeline_referee": 5,      # rows-only green r1; fixture oracle r5
-    "dedup_near_minhash": 5,    # rows-only green r1; md5-replay oracle r5
-    "anomaly_mad_robust": 5,    # hash green r4; cents-fixpoint rewrite r5
-    "agg_approx_percentile": 5,  # red r4; scalar-columns repair r5
-    "dedup_simhash": 6,          # rows-only green r1; md5 hash oracle r6
-    "udtf_explode_matches": 6,   # rows-only green r1; chunker oracle r6
-}
-
-# Externally verified green in round 1 (CORRECTNESS_r01.json: hash_match or
-# rows-only rows>0) — kept as a static fallback in case the report files
-# ever go missing.
-_VERIFIED_R01: frozenset[str] = frozenset({
-    "scan_parquet", "filter_contains", "project_select_drop",
-    "project_literal", "project_concat_url", "filter_date_or",
-    "filter_nonempty", "filter_isin_anti", "filter_array_len",
-    "str_split_clean", "array_explode", "str_first_token",
-    "str_overtime_sum", "str_classify_case", "date_parse_format",
-    "date_add_tomorrow", "safe_cast_int", "json_collect_struct",
-    "json_parse_extract", "agg_collect_list", "agg_pivot_activity",
-    "agg_collect_struct", "agg_string_concat", "agg_count_group",
-    "agg_sum_avg", "agg_distinct", "agg_rollup", "join_zip_index",
-    "join_left_enrich", "join_multi_hop", "join_semi", "join_anti",
-    "join_theta_contains", "join_hash_equi", "join_asof_lastn",
-    "setop_union", "setop_except", "sort_limit_topn", "window_topk_recent",
-    "window_ffill", "window_running_sum", "udf_classify",
-    "udtf_explode_matches", "sink_write", "dedup_exact",
-    "dedup_near_minhash", "dedup_simhash",
-})
-
-
-def _verified_rounds() -> dict[str, set[int]]:
-    """name -> set of round numbers in which the external harness
-    verified the query green (hash_match, or a rows-only check with
-    rows > 0), parsed from the CORRECTNESS_r*.json files the driver
-    leaves at the repo root.  Robust to absent/corrupt files — the
-    static round-1 set is always included."""
-    import glob
-    import json
-    import os
-    import re as _re
-
-    verified: dict[str, set[int]] = {k: {1} for k in _VERIFIED_R01}
-    root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                report = json.load(f)
-            for name, rec in report.items():
-                if not isinstance(rec, dict):
-                    continue
-                green = rec.get("hash_match") or (
-                    rec.get("err") == "no_oracle"
-                    and (rec.get("spark_rows") or 0) > 0
-                )
-                if green:
-                    verified.setdefault(name, set()).add(rnd)
-        except Exception:  # noqa: BLE001 — a bad report must not break queries()
-            continue
-    return verified
-
-
-def _rotate(merged: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """Order the registry: curated head, then never-verified, then verified.
-
-    A head key keeps its slot until a report from round >=
-    ``_REPIN_MIN_ROUND.get(key, 2)`` confirms it green (``retired``);
-    from then on it yields to never-verified queries automatically — no
-    code change needed between rounds.  The per-key minimum closes the
-    oracle-upgrade blind spot: a key verified under an OLD weaker oracle
-    stays pinned until the new oracle earns its own external row."""
-    rounds = _verified_rounds()
-    done = set(rounds)
-
-    def _retired(k: str) -> bool:
-        need = _REPIN_MIN_ROUND.get(k, 2)
-        return any(r >= need for r in rounds.get(k, ()))
-
-    head = [k for k in _ROUND_HEAD if k in merged and not _retired(k)]
-    head_set = set(head)
-    mid = [k for k in merged if k not in head_set and k not in done]
-    back = [k for k in merged if k not in head_set and k in done]
-    return {k: merged[k] for k in (*head, *mid, *back)}
+    return merged
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -276,12 +276,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions = near-dup candidates).
 
     ORACLE-CHECKED (upgraded r6 from rows-only, VERDICT r5 ask #3): the
-    portable variant bases the per-shingle hash on md5 (low 60 digest
+    per-shingle hash is md5-based (``simhash_portable``: first 60 digest
     bits), exactly the ``dedup_near_minhash`` r5 playbook — DuckDB
     re-derives 2-gram shingles, the base hashes, and the 16-bit
-    majority-vote fold from the documents view alone.  The xxhash64
-    fast path (simhash64) remains the production default and keeps its
-    Hamming-distance/recall tests in tests/test_dedup.py."""
+    majority-vote fold from the documents view alone."""
     from historic_score_etl_pipeline_spark.operators.scale import ensure_parallelism
 
     docs = ensure_parallelism(

@@ -336,6 +336,7 @@ def dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     avoids."""
     from historic_score_etl_pipeline_spark.operators.dedup import (
         band_buckets_from_hashes,
+        band_self_join,
         jaccard,
         shingle_hashes,
         token_hashes,
@@ -362,25 +363,12 @@ def dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materializes it — eager spent one extra synchronous job here.
     )
     base = pin(base)
-    # banded feeds both self-join sides: pinned lazily so the MinHash
-    # banding over the signature index runs once (r11; same rationale as
-    # lsh_candidate_pairs), SHUFFLE_HASH because the checkpointed band
-    # table carries no size statistics.
+    # banded feeds both self-join sides: pinned so the MinHash banding
+    # over the signature index runs once (see band_self_join)
     banded = pin(band_buckets_from_hashes(
         base.select("doc_id", "sh"), "doc_id", "sh"
     ))
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
+    pairs = band_self_join(banded, "doc_id", ["bucket"])
     verified = (
         pairs.join(
             base.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")),

@@ -1,7 +1,5 @@
 """Round-4 batch 30 — nine further engine-surface staples, every one
-oracle-checked.  These land in mid-registry slots (the head-50 is
-reserved for the never-externally-verified backlog this round) and
-rotate into external verification next round:
+oracle-checked:
 
 * ``agg_corr_matrix`` — pairwise Pearson correlations from EXACT
   decimal sums (never the engine's streaming ``corr`` accumulator,

@@ -260,6 +260,7 @@ def dedup_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole chain SQL-replayable."""
     from historic_score_etl_pipeline_spark.operators.dedup import (
         band_buckets_from_hashes,
+        band_self_join,
         minhash_mins,
         shingle_hashes,
         token_hashes_md5,
@@ -281,27 +282,14 @@ def dedup_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # sigs and banded each feed TWO consumers (both pair-side joins /
     # both self-join sides): pinned lazily so the 32-way MinHash fold and
-    # the banding run once, not twice (r11; same rationale as
-    # lsh_candidate_pairs).  SHUFFLE_HASH on the self-join because the
-    # checkpointed band table has no size statistics.
+    # the banding run once, not twice (see band_self_join)
     sigs = pin(sh.select(
         "doc_id", minhash_mins(F.col("base"), 32).alias("sig")
     ))
     banded = pin(band_buckets_from_hashes(
         sh, "doc_id", "base", 32, 8, portable=True
     ))
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
+    pairs = band_self_join(banded, "doc_id", ["bucket"])
     matches = F.aggregate(
         F.zip_with(
             F.col("sig_a"),

@@ -1,4 +1,4 @@
-"""Round-5 batch 39 — filling out the head-50 with four staples:
+"""Round-5 batch 39 — four staples:
 
 * ``window_drawdown_max`` — maximum drawdown per user (running max of
   the cumulative series minus the current value, maximized): the

@@ -1,6 +1,5 @@
 """Round-6 batch 49 — growth accounting, distribution drift, and
-data-balance staples (overflow slots: pinned behind the head-50, they
-auto-promote into round 7's external window):
+data-balance staples:
 
 * ``event_growth_accounting`` — the canonical growth ledger: each
   active (user, day) classified new / retained / resurrected by the

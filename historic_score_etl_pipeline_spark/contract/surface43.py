@@ -1,5 +1,5 @@
 """Round-6 batch 50 — LM scoring, codec, nested-array, calendar, and
-embedding-outlier staples (overflow slots, round-7 auto-promote):
+embedding-outlier staples:
 
 * ``text_doc_surprisal_unigram`` — per-document mean surprisal under
   the CORPUS unigram LM: Σ tf·floor(ln(T/c_t)·1e6 + 0.5) exactly —

@@ -1,5 +1,5 @@
 """Round-6 batch 51 — cohort economics, feature assembly, mergeable
-state, embedded-CSV parsing, and referential audits (overflow slots):
+state, embedded-CSV parsing, and referential audits:
 
 * ``event_cohort_ltv`` — the revenue companion to retention cohorts:
   per (signup-week cohort, week offset) exact cent revenue plus the

@@ -1,5 +1,5 @@
 """Round-6 batch 52 — sub-daily windows, nested JSON, plan reuse,
-ranking semantics, and experimentation (overflow slots):
+ranking semantics, and experimentation:
 
 * ``window_tumbling_15min`` — sub-daily tumbling buckets by INTEGER
   epoch arithmetic (epoch_seconds div 900) — engine-portable without

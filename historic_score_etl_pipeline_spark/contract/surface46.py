@@ -1,5 +1,4 @@
-"""Round-6 batch 53 — corpus statistics and pipeline-gate staples
-(overflow slots):
+"""Round-6 batch 53 — corpus statistics and pipeline-gate staples:
 
 * ``text_collocation_llr`` — Dunning log-likelihood-ratio collocation
   scoring of adjacent-token bigrams: the 2×2 contingency

@@ -1,5 +1,5 @@
 """Round-6 batch 54 — frame, bit-aggregate, morphology, grid, and
-bag-semantics staples (overflow slots):
+bag-semantics staples:
 
 * ``window_range_value_frame`` — a NUMERIC range frame (RANGE BETWEEN
   500 PRECEDING AND 500 FOLLOWING over cents): each event's ±$5

@@ -1,5 +1,5 @@
 """Round-6 batch 55 — SimHash candidate pairs, naive forecasting, and
-surface completions (overflow slots):
+surface completions:
 
 * ``dedup_simhash_hamming`` — SimHash goes end-to-end: the 16-bit
   portable (md5-base) signature splits into four 4-bit bands; pairs
@@ -34,7 +34,10 @@ from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.operators.pins import pin
-from historic_score_etl_pipeline_spark.operators.dedup import simhash_portable
+from historic_score_etl_pipeline_spark.operators.dedup import (
+    hamming16_pairs,
+    simhash_portable,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- SimHash Hamming candidates ----------------------------------------------------
@@ -51,54 +54,13 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
-    # Pinned (r12, VERDICT r11 ask #10): the band self-join consumes the
-    # signature table on BOTH sides — unpinned, the whole shingle→md5→
-    # majority-vote chain executed twice (the same disease the scaled
-    # sibling dedup_simhash_scaled had fixed in r11).  SHUFFLE_HASH on the
-    # self-join because the pinned table carries no size statistics (the
-    # planner would sort-merge) and the band table is corpus-sized (a
-    # broadcast would not survive real corpora).
+    # Pinned: the band self-join consumes the signature table on BOTH
+    # sides (see band_self_join)
     sig = pin(docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         simhash_portable("text").alias("sh"),
     ))
-    bands = sig.select(
-        "doc_id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sh", 4 * b)
-                        .bitwiseAND(F.lit(15))
-                        .alias("nib"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "sh", F.col("bk.band").alias("band"), F.col("bk.nib").alias("nib"))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.nib") == F.col("b.nib"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
-    dist = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.select(
-        "id_a", "id_b", dist.cast("long").alias("hamming")
-    ).where(F.col("hamming") <= _SH_MAX_DIST)
+    return hamming16_pairs(sig, "doc_id", "sh", _SH_MAX_DIST)
 
 
 DEDUP_SIMHASH_HAMMING_SQL = f"""

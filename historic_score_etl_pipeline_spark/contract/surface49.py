@@ -1,6 +1,6 @@
 """Round-6 batch 56 — TPC-H completion (q13/q17: the full 22-query
 decision-support suite is now covered) plus attribution, migration
-checksums, and sentence statistics (overflow slots):
+checksums, and sentence statistics:
 
 * ``tpch_q13_cust_distribution`` — Q13: the customer order-count
   distribution through a filtered LEFT OUTER join (the filter lives in

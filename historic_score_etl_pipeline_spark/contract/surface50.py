@@ -1,6 +1,5 @@
 """Round-6 batch 57 — URL structure, outer-explode NULL semantics,
-business-day arithmetic, RAKE keyword extraction, and BY-NAME union
-(overflow slots):
+business-day arithmetic, RAKE keyword extraction, and BY-NAME union:
 
 * ``str_parse_url_parts`` — compose a canonical product URL per order
   then take it apart again with ``parse_url`` (HOST / PATH / a named

@@ -1,6 +1,6 @@
 """Round-6 batch 58 — signed-random-projection LSH, bipartite
 similarity projection, moving-average backtest, Chao1 richness, and a
-time-bounded funnel (overflow slots):
+time-bounded funnel:
 
 * ``embed_lsh_hyperplane`` — SRP-LSH (Charikar) for cosine: 16
   deterministic ±1 hyperplanes (md5-derived signs, engine-portable),
@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.dedup import hamming16_pairs
 from historic_score_etl_pipeline_spark.operators.pins import pin
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 from historic_score_etl_pipeline_spark.operators.similarity import valid_vectors
@@ -93,53 +94,14 @@ def embed_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.pow(F.lit(2.0), b.cast("double")).cast("long"),
         ).otherwise(F.lit(0)),
     )
-    # Pinned (r12, VERDICT r11 ask #10): the band self-join consumes the
-    # signature table on both sides — unpinned, the 16×64 integer
-    # projections executed twice (same fix as the scaled sibling).
+    # Pinned: the band self-join consumes the signature table on both
+    # sides (see band_self_join)
     sig = pin(
         emb.crossJoin(F.broadcast(hp))
         .select(F.col("vec_id").cast("long").alias("vec_id"), q.alias("q"), "hp")
         .select("vec_id", sig_col.alias("sg"))
     )
-    bands = sig.select(
-        "vec_id",
-        "sg",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sg", 4 * b)
-                        .bitwiseAND(F.lit(15))
-                        .alias("nib"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "vec_id", "sg", F.col("bk.band").alias("band"), F.col("bk.nib").alias("nib")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.nib") == F.col("b.nib"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            F.col("a.sg").alias("sg_a"),
-            F.col("b.sg").alias("sg_b"),
-        )
-        .distinct()
-    )
-    dist = F.bit_count(F.col("sg_a").bitwiseXOR(F.col("sg_b")))
-    return cand.select(
-        "id_a", "id_b", dist.cast("long").alias("hamming")
-    ).where(F.col("hamming") <= _SRP_MAX_DIST)
+    return hamming16_pairs(sig, "vec_id", "sg", _SRP_MAX_DIST)
 
 
 EMBED_LSH_HYPERPLANE_SQL = f"""

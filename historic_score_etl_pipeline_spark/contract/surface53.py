@@ -1,5 +1,5 @@
 """Round-6 batch 60 — sketch set-algebra, connector quirks, calendar
-snapping, interval sweep, and dynamic pivot (overflow slots):
+snapping, interval sweep, and dynamic pivot:
 
 * ``agg_hll_intersection`` — |A∩B| by inclusion–exclusion over the
   repo's PORTABLE HLL (surface29 register scheme: md5 registers,

@@ -1,6 +1,6 @@
 """Round-6 batch 61 — DISTINCT aggregates, rendezvous hashing,
 truncated-embedding retrieval, confidence-bound ranking, and a fully
-oracled image perceptual hash (overflow slots):
+oracled image perceptual hash:
 
 * ``agg_sum_distinct`` — sum/count/avg over DISTINCT values per group
   (the Expand-based distinct-aggregate plan).

@@ -1,5 +1,5 @@
 """Round-6 batch 62 — fixed-width ingest, calendar rules, phonetic
-blocking, multi-measure unpivot, weighted means (overflow slots):
+blocking, multi-measure unpivot, weighted means:
 
 * ``scan_fixed_width_file`` — the mainframe-style connector: records
   staged as FIXED-WIDTH text lines (zero-padded/space-padded columns

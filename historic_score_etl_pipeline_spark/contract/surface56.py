@@ -1,5 +1,5 @@
 """Round-6 batch 63 — BFS frontiers, audio frame features, resilient
-and recursive scans, and interval-union time (overflow slots):
+and recursive scans, and interval-union time:
 
 * ``graph_bfs_2hop`` — per-seed BFS frontier expansion over the
   co-order part graph (same edge builder as triangle/degree keys):

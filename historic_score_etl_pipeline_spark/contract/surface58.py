@@ -1,5 +1,5 @@
 """Round-6 batch 65 — ADC retrieval over PQ codes, vocabulary drift,
-weighted moving averages, zstd parquet, SLA buckets (overflow slots):
+weighted moving averages, zstd parquet, SLA buckets:
 
 * ``embed_pq_adc_topk`` — the PQ query path: per query vector a
   5×8×4-entry distance LUT (query-to-centroid partials, a broadcast

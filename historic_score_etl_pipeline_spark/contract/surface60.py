@@ -1,5 +1,5 @@
 """Round-6 batch 67 — leakage-safe splitting, YoY deltas, full-outer
-reconciliation, stopword discovery, min-max scaling (overflow slots):
+reconciliation, stopword discovery, min-max scaling:
 
 * ``sample_split_leakage_safe`` — train/test assignment where
   near-duplicates NEVER straddle the boundary: docs sharing a 40-char

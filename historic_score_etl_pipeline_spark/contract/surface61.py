@@ -1,6 +1,5 @@
 """Round-6 batch 68 — numeric band joins, burst detection, pixel
-histograms, fixed-offset display time, positional token stats
-(overflow slots):
+histograms, fixed-offset display time, positional token stats:
 
 * ``join_value_band_bucketed`` — the numeric band self-join
   |price_a − price_b| ≤ $1 within a status, WITHOUT a nested-loop:

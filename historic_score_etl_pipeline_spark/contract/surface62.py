@@ -1,5 +1,5 @@
 """Round-6 batch 69 — Bollinger bands, sketch calibration, Easter
-computus, degree assortativity, idempotent append (overflow slots):
+computus, degree assortativity, idempotent append:
 
 * ``window_bollinger_bands`` — the trailing-20-day mean ± 2σ bands
   over the daily count series: integer Σ/Σ² feed one IDENTICAL double

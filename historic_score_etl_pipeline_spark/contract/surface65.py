@@ -1,5 +1,5 @@
 """Round-6 batch 72 — Kadane max-subarray, RSI oscillator, frequency of
-frequencies, skip-gram pairs, running VWAP (overflow slots):
+frequencies, skip-gram pairs, running VWAP:
 
 * ``window_kadane_max_subarray`` — the maximum-sum contiguous event run
   per user (purchases/signups credit, everything else debits), solved

@@ -1,6 +1,5 @@
 """Round-6 batch 73 — image tile featurization, vocabulary LCP, common-
-neighbor link prediction, recency-decay sampling, 4-4-5 retail calendar
-(overflow slots):
+neighbor link prediction, recency-decay sampling, 4-4-5 retail calendar:
 
 * ``multimodal_image_tile_means`` — 2×2 tile mean-intensity features
   over REAL decoded BMP pixels (the vision-patch featurizer): per

@@ -1,6 +1,5 @@
 """Round-6 batch 74 — concurrency duration histogram, octant kNN graph,
-clustered sorted sink, path-pattern partitions, Julian day numbers
-(overflow slots):
+clustered sorted sink, path-pattern partitions, Julian day numbers:
 
 * ``event_concurrency_duration_histogram`` — for each user, how long
   EXACTLY k event intervals were simultaneously active (60 s windows):

@@ -1,6 +1,6 @@
 """Round-6 batch 75 — lag-1 autocorrelation terms, vocabulary coverage
 curve, audio silence trimming, holiday-aware business days, DECIMAL
-parquet fidelity (overflow slots):
+parquet fidelity:
 
 * ``event_autocorr_lag1`` — lag-1 autocorrelation of each type's
   daily-count series, reported as the EXACT integer Pearson terms

@@ -1,5 +1,5 @@
 """Round-6 batch 76 — SQL scalar UDFs, Hampel filter, footer-stats file
-skipping, leap-day audit, two-round HITS (overflow slots):
+skipping, leap-day audit, two-round HITS:
 
 * ``sql_scalar_udf_create`` — Spark 4 SQL UDFs (``CREATE TEMPORARY
   FUNCTION … RETURN <expr>``): a net-revenue money function and a

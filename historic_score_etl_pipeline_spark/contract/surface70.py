@@ -1,6 +1,5 @@
 """Round-6 batch 77 — image edge energy, two-pass k-core, two-step
-Markov paths, Simpson's-paradox rate audit, per-nation Lorenz deciles
-(overflow slots):
+Markov paths, Simpson's-paradox rate audit, per-nation Lorenz deciles:
 
 * ``multimodal_image_edge_energy`` — first-difference gradient energy
   over real decoded BMPs (the ``render_text_bmp`` fixture family of

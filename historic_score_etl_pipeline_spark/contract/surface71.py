@@ -1,6 +1,5 @@
 """Round-6 batch 78 — audio peak counting, overlapping-window UDTF,
-map HOFs, correlated scalar subqueries, longest-increasing-run UDAF
-(overflow slots):
+map HOFs, correlated scalar subqueries, longest-increasing-run UDAF:
 
 * ``multimodal_audio_peak_count`` — strict local maxima over REAL
   decoded WAV samples (the ``render_text_wav`` fixture family): per

@@ -1,6 +1,6 @@
 """Round-6 batch 79 — seasonal-residual IQR anomalies, schema-contract
 audit, session dwell percentiles, 2-D Pareto front, CSV null-literal
-ingest (overflow slots):
+ingest:
 
 * ``anomaly_seasonal_residual_iqr`` — deseasonalized outliers: per
   (event_type, day) count minus the day-of-week mean, as the EXACT

@@ -1,5 +1,5 @@
 """Round-6 batch 80 — alert debounce, transaction-log table scan, CDC
-snapshot diff, BPE pair counts, EXECUTE IMMEDIATE (overflow slots):
+snapshot diff, BPE pair counts, EXECUTE IMMEDIATE:
 
 * ``event_alert_debounce`` — greedy rate-limited alerting: an 'error'
   event EMITS iff it is ≥ 1 h after the last EMITTED alert of that

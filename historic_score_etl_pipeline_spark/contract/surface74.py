@@ -1,6 +1,6 @@
 """Round-6 batch 81 — linear gap-fill interpolation, SQL session
 variables, per-node clustering coefficient, WAPE forecast error, image
-symmetry score (overflow slots):
+symmetry score:
 
 * ``window_gap_fill_interpolate`` — LINEAR interpolation over a dropout
   series (every 3rd day knocked out deterministically, then

@@ -1,6 +1,5 @@
 """Round-6 batch 82 — ANN recall evaluation, diff-in-diff estimator,
-Kneser-Ney continuation counts, schedule expansion, winsorized mean
-(overflow slots):
+Kneser-Ney continuation counts, schedule expansion, winsorized mean:
 
 * ``embed_octant_recall_eval`` — retrieval QUALITY evaluation in-engine:
   for 10 probe vectors, exact brute-force top-10 (integer dots, the

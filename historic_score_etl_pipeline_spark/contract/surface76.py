@@ -1,6 +1,6 @@
 """Round-6 batch 83 — packed-binary record ingest, 2-channel Shapley
 attribution, session Sankey edges, audio 2× downsample, join-strategy
-hints (overflow slots):
+hints:
 
 * ``scan_binary_packed_records`` — fixed-width BINARY record ingest:
   staged shards of little-endian ``<q q>`` (key, cents) 16-byte records

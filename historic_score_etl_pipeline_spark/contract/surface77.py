@@ -1,6 +1,6 @@
 """Round-6 batch 84 — 1-NN classifier evaluation, hard-negative mining,
 to_number/format_number roundtrip, GROUP BY ALL sugar, add_months EOM
-semantics (overflow slots):
+semantics:
 
 * ``embed_knn_classifier_eval`` — in-engine CLASSIFIER eval: every
   vector 1-NN-classified within its sign octant (exact integer dots,

@@ -1,6 +1,5 @@
 """Round-6 batch 87 — ZIP archive ingest, word burstiness, try_*
-arithmetic semantics, first-purchase rank distribution, column profile
-(overflow slots):
+arithmetic semantics, first-purchase rank distribution, column profile:
 
 * ``scan_zip_archive_members`` — archive ingest: a staged ZIP with
   three CSV members read through ``binaryFile`` + an Arrow-batched

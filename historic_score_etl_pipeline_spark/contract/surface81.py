@@ -1,6 +1,6 @@
 """Round-6 batch 88 — real streaming tumbling top-k, array prefix scan,
 histogram equalization, spend-threshold crossing, rollup distinct
-counts (overflow slots):
+counts:
 
 * ``stream_tumbling_topk`` — a REAL Structured Streaming run inside the
   contract: file-source events → watermark → 6-h tumbling windows →

@@ -1,6 +1,6 @@
 """Round-6 batch 89 — partition backfill planning, props numeric
 rollup, behavior-vector similarity, confusable folding, paired
-pre/post terms (overflow slots):
+pre/post terms:
 
 * ``date_partition_backfill_plan`` — the orchestrator's gap planner: a
   hive-partitioned landing zone staged with every 4th day MISSING,

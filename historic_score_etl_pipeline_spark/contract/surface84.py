@@ -1,6 +1,5 @@
 """Round-6 batch 91 — tolerance reconciliation, ISO-8601 durations,
-time-split leakage audit, floor-clamped running balance, CRLF CSV
-(overflow slots):
+time-split leakage audit, floor-clamped running balance, CRLF CSV:
 
 * ``join_reconcile_tolerance`` — payments-vs-orders reconciliation with
   tolerance: staged payments carry deterministic ±1¢ / +1-day jitter;

@@ -1,6 +1,5 @@
 """Round-6 batch 92 — Hamilton apportionment, nested-struct pruning,
-FILTER-clause aggregates, image projection peaks, weighted rule scores
-(overflow slots):
+FILTER-clause aggregates, image projection peaks, weighted rule scores:
 
 * ``agg_budget_apportionment`` — largest-remainder (Hamilton)
   allocation: a fixed 1,000,000-unit budget split across nations

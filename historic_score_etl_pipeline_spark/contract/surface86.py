@@ -1,6 +1,5 @@
 """Round-6 batch 93 — order/line consistency audit, prefix
-autocomplete, pinned NULL ordering, file inventory, runs-test terms
-(overflow slots):
+autocomplete, pinned NULL ordering, file inventory, runs-test terms:
 
 * ``audit_order_line_consistency`` — the referential-consistency audit:
   per status, orders with/without lineitems, how many order totals

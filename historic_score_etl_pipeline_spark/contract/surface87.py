@@ -1,5 +1,5 @@
 """Round-6 batch 94 — QUALIFY dialect pair, map_zip_with merge, binary
-change-point, tokenizer fertility, group medoid (overflow slots):
+change-point, tokenizer fertility, group medoid:
 
 * ``sql_qualify_dialect_pair`` — the QUALIFY pattern: Spark has no
   QUALIFY clause, so the ranked filter is the documented subquery

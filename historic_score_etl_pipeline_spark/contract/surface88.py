@@ -1,6 +1,5 @@
 """Round-6 batch 95 — bridge allocation, INT96 legacy timestamps, CSV
-formula sanitizing, value-band migration, image border contrast
-(overflow slots):
+formula sanitizing, value-band migration, image border contrast:
 
 * ``join_bridge_weighted_allocation`` — many-to-many bridge-table
   allocation: each order belongs to (k % 3 + 1) campaigns; its cents

@@ -1,6 +1,5 @@
 """Round-6 batch 96 — Latin-1 charset ingest, accumulating snapshot,
-epoch-unit audit, JSON escape roundtrip, checksummed manifest write
-(overflow slots):
+epoch-unit audit, JSON escape roundtrip, checksummed manifest write:
 
 * ``scan_csv_latin1_charset`` — encoding surface: a staged ISO-8859-1
   CSV (accented marker in every 13th status cell) read with the

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.dedup import band_self_join
 from historic_score_etl_pipeline_spark.operators.pins import pin
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
@@ -105,6 +106,27 @@ def srps_width(n_col):
         F.lit(_SRPS_MIN_W),
         F.least(F.lit(_SRPS_MAX_W), F.length(F.bin(n1)).cast("int")),
     )
+
+
+def _band_pairs(sig: DataFrame, id_col: str) -> DataFrame:
+    """One band row per ``ks`` element → :func:`band_self_join` on
+    (band, bk) → popcount(xor) over the full 4w-bit signature ≤ 3."""
+    bands = sig.select(
+        id_col, "ks", F.posexplode("ks").alias("band", "bk")
+    )
+    cand = band_self_join(bands, id_col, ["band", "bk"], carry=["ks"])
+    ham = F.aggregate(
+        F.zip_with(
+            "ks_a",
+            "ks_b",
+            lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, d: acc + d,
+    )
+    return cand.select(
+        "id_a", "id_b", ham.cast("long").alias("hamming")
+    ).where(F.col("hamming") <= _SRPS_MAX_DIST)
 
 
 def embed_lsh_hyperplane_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,15 +189,8 @@ def embed_lsh_hyperplane_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0)),
         ),
     )
-    # Pinned (lazy checkpoint): the signature table feeds BOTH sides of
-    # the band self-join, and the planner broadcast one whole side —
-    # the 4w×64 integer projections executed twice (r11 plan audit of the
-    # simhash sibling: BroadcastExchange over the full sig subtree).  One
-    # materialization + a SHUFFLE_HASH hint (post-checkpoint the table
-    # has no size statistics, so the planner would fall back to
-    # sort-merge; the band table is corpus-sized, so at scale a broadcast
-    # would be dishonest anyway).  Measured on the simhash sibling at
-    # sf0.1: 3.4 s → 1.8 s, rows identical.
+    # Pinned: the signature table feeds BOTH sides of the band self-join
+    # (see band_self_join)
     sig = (
         emb.crossJoin(F.broadcast(hp))
         .select(
@@ -187,37 +202,7 @@ def embed_lsh_hyperplane_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", ks_col.alias("ks"))
     )
     sig = pin(sig)
-    bands = sig.select(
-        "vec_id", "ks", F.posexplode("ks").alias("band", "bk")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            F.col("a.ks").alias("ks_a"),
-            F.col("b.ks").alias("ks_b"),
-        )
-        .distinct()
-    )
-    ham = F.aggregate(
-        F.zip_with(
-            "ks_a",
-            "ks_b",
-            lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, d: acc + d,
-    )
-    return cand.select(
-        "id_a", "id_b", ham.cast("long").alias("hamming")
-    ).where(F.col("hamming") <= _SRPS_MAX_DIST)
+    return _band_pairs(sig, "vec_id")
 
 
 EMBED_LSH_HYPERPLANE_SCALED_SQL = f"""
@@ -356,42 +341,9 @@ def dedup_simhash_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda a, x: a + x,
         ),
     )
-    # Pinned + SHUFFLE_HASH: same rationale and measurement as the
-    # hyperplane sibling above (sig fed both self-join sides; the planner
-    # broadcast one side, re-running the whole shingle→md5→vote chain —
-    # r11: 3.4 s → 1.8 s at sf0.1, rows identical).
+    # Pinned: same rationale as the hyperplane sibling above
     sig = pin(base.select("doc_id", ks_col.alias("ks")))
-    bands = sig.select(
-        "doc_id", "ks", F.posexplode("ks").alias("band", "bk")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.ks").alias("ks_a"),
-            F.col("b.ks").alias("ks_b"),
-        )
-        .distinct()
-    )
-    ham = F.aggregate(
-        F.zip_with(
-            "ks_a",
-            "ks_b",
-            lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, d: acc + d,
-    )
-    return cand.select(
-        "id_a", "id_b", ham.cast("long").alias("hamming")
-    ).where(F.col("hamming") <= _SRPS_MAX_DIST)
+    return _band_pairs(sig, "doc_id")
 
 
 DEDUP_SIMHASH_SCALED_SQL = f"""

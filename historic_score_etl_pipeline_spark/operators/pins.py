@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import os
 import threading
+import warnings
+
 from pyspark.sql import DataFrame
 
 _LOCK = threading.Lock()
@@ -53,19 +55,20 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     Lazy is the operators' default: the first downstream action
     materializes the blocks, so constructing a query runs no extra job.
 
-    ``HSEP_AUDIT_NO_PIN=1`` makes pin a no-op — plan-audit mode: a
-    checkpoint truncates the visible plan at the pinned RDD, so the full
-    dataflow (how many scans/explodes/exchanges the query REALLY
-    contains) is only visible with pins disabled.  Never set it for
-    timed runs; iterative operators become quadratic without pins.
+    Under ``HSEP_RELIABLE_CHECKPOINT`` with no checkpoint dir set on the
+    SparkContext, pin warns and falls back to ``localCheckpoint``; any
+    other reliable-checkpoint failure propagates.
     """
-    if os.environ.get("HSEP_AUDIT_NO_PIN"):
-        return df
     if os.environ.get("HSEP_RELIABLE_CHECKPOINT"):
-        try:
+        sc = df.sparkSession.sparkContext
+        if sc._jsc.sc().getCheckpointDir().isDefined():
             return df.checkpoint(eager=eager)
-        except Exception:
-            pass  # no checkpoint dir configured — fall through to local
+        warnings.warn(
+            "HSEP_RELIABLE_CHECKPOINT is set but the SparkContext has no "
+            "checkpoint dir; pinning with a non-replicated localCheckpoint",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     cp = df.localCheckpoint(eager=eager)
     try:
         handle = cp._jdf.queryExecution().logical().rdd()

@@ -36,56 +36,27 @@ def test_entry_smoke(spark):
     assert len(df.schema.fields) >= 5
 
 
-def test_registry_rotation_is_self_maintaining(monkeypatch):
-    """Keys verified green by a harness report must yield their
-    front-of-registry slot automatically.  Hermetic: the verified set is
-    monkeypatched to fixtures so the assertion holds regardless of which
-    CORRECTNESS_r*.json files the live repo root carries."""
+def test_registry_is_discovery_order():
+    """The registry is every contract module's ``QUERIES`` keys, modules
+    in ``_order`` order: nothing lost, duplicated or reordered."""
+    import importlib
+    import pkgutil
+
     import historic_score_etl_pipeline_spark.contract as c
 
-    # Baseline fixture: only the static round-1 set is verified, so the
-    # curated head keeps its slots.
-    monkeypatch.setattr(
-        c, "_verified_rounds", lambda: {k: {1} for k in c._VERIFIED_R01}
+    names = sorted(
+        (n for _, n, _ in pkgutil.iter_modules(c.__path__)
+         if not n.startswith("_")),
+        key=c._order,
     )
-    before = list(c._merged())
-    head_live = [k for k in c._ROUND_HEAD if k in before]
-    assert before[0] == head_live[0]
-
-    # Fixture report from the key's repin round (or round 2 for unpinned
-    # keys) confirms two head keys green — they must retire behind the
-    # never-verified block.
-    confirmed = {head_live[0], head_live[7]}
-    fixture = {k: {1} for k in c._VERIFIED_R01}
-    for k in confirmed:
-        fixture.setdefault(k, set()).add(c._REPIN_MIN_ROUND.get(k, 2))
-    monkeypatch.setattr(c, "_verified_rounds", lambda: fixture)
-    after = list(c._merged())
-    for k in confirmed:
-        assert k not in after[:20], k
-    # registry contents unchanged, only order
-    assert sorted(after) == sorted(before)
-
-
-def test_repinned_key_survives_pre_repin_green_row(monkeypatch):
-    """The oracle-upgrade blind spot (VERDICT r4 ask #3): a key verified
-    green BEFORE its repin round must stay in the head — the old row
-    proved the weaker oracle, not the current one."""
-    import historic_score_etl_pipeline_spark.contract as c
-
-    repinned = next(iter(c._REPIN_MIN_ROUND))
-    need = c._REPIN_MIN_ROUND[repinned]
-    fixture = {k: {1} for k in c._VERIFIED_R01}
-    fixture.setdefault(repinned, set()).add(need - 1)  # old weaker pass
-    monkeypatch.setattr(c, "_verified_rounds", lambda: fixture)
-    head_pos = list(c._merged()).index(repinned)
-    assert head_pos < len(c._ROUND_HEAD), (repinned, head_pos)
-
-    # Once a round >= repin-round report lands, it retires normally.
-    fixture2 = {k: v | ({need} if k == repinned else set())
-                for k, v in fixture.items()}
-    monkeypatch.setattr(c, "_verified_rounds", lambda: fixture2)
-    assert list(c._merged()).index(repinned) >= len(c._ROUND_HEAD)
+    expected = [
+        k
+        for n in names
+        for k in importlib.import_module(f"{c.__name__}.{n}").QUERIES
+    ]
+    assert len(expected) == len(set(expected))
+    assert list(c._merged()) == expected
+    assert names[:5] == list(c._CORE)
 
 
 def test_compare_rejects_hugeint_dtype_drift():

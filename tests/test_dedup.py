@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.operators.dedup import (
+    band_self_join,
     dedup_exact,
     jaccard,
     lsh_candidate_pairs,
@@ -81,3 +82,40 @@ def test_near_dup_jaccard_finds_planted(spark):
     # planted near-dups (suffix noise) have jaccard ≈ shingle overlap ≈ >0.9
     assert out.count() > 0
     assert out.where(F.col("jaccard") > 1.0).count() == 0
+
+
+# --- band_self_join: the one LSH band self-join --------------------------------
+
+# (id, band, bk, sig): ids 1 and 3 share BOTH bands; 2 shares band 0 with
+# them; 5's bk values collide with 2's only across different bands.
+_BANDS = [
+    (3, 0, 7, 30), (1, 0, 7, 10), (1, 1, 9, 10), (3, 1, 9, 30),
+    (2, 0, 7, 20), (2, 1, 5, 20), (5, 0, 5, 50), (5, 1, 8, 50),
+]
+
+
+def _band_frame(spark):
+    return spark.createDataFrame(_BANDS, "id long, band int, bk long, sig long")
+
+
+def test_band_self_join_pairs_once_and_ordered(spark):
+    rows = band_self_join(_band_frame(spark), "id", ["band", "bk"]).collect()
+    pairs = [(r.id_a, r.id_b) for r in rows]
+    assert all(a < b for a, b in pairs)
+    # (1, 3) shares two bands but is one row
+    assert sorted(pairs) == [(1, 2), (1, 3), (2, 3)]
+
+
+def test_band_self_join_keys_need_full_equality(spark):
+    bands = _band_frame(spark)
+    both = {tuple(r) for r in band_self_join(bands, "id", ["band", "bk"]).collect()}
+    bk_only = {tuple(r) for r in band_self_join(bands, "id", ["bk"]).collect()}
+    assert (2, 5) not in both
+    assert bk_only == both | {(2, 5)}
+
+
+def test_band_self_join_carries_both_sides(spark):
+    out = band_self_join(_band_frame(spark), "id", ["band", "bk"], carry=["sig"])
+    assert out.columns == ["id_a", "id_b", "sig_a", "sig_b"]
+    for r in out.collect():
+        assert (r.sig_a, r.sig_b) == (10 * r.id_a, 10 * r.id_b)

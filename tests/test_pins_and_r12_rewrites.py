@@ -48,6 +48,25 @@ def test_unpin_releases_exactly_one(spark):
     pins.release_pins()
 
 
+def test_reliable_checkpoint_without_dir_warns_and_pins_locally(
+    spark, monkeypatch
+):
+    """HSEP_RELIABLE_CHECKPOINT with no checkpoint dir must not degrade
+    silently: pin warns, then falls back to a (registered) local pin."""
+    import pytest
+
+    from historic_score_etl_pipeline_spark.operators import pins
+
+    assert not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
+    monkeypatch.setenv("HSEP_RELIABLE_CHECKPOINT", "1")
+    pins.release_pins()
+    with pytest.warns(RuntimeWarning, match="no checkpoint dir"):
+        cp = pins.pin(spark.range(100).select("id"))
+    assert cp.count() == 100
+    assert "localCheckpoint" in pins.explain_str(cp)
+    assert pins.release_pins() == 1
+
+
 def test_connected_components_releases_superseded_rounds(spark):
     """After a distributed CC run, only O(1) pins may remain (the final
     label table), not one per propagation round."""

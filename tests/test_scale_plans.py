@@ -1114,3 +1114,76 @@ def test_contract_int_product_overflow_audit():
         "it with a proven scale bound (ARCHITECTURE.md int64-overflow "
         f"pattern): {offenders}"
     )
+
+
+# --- LSH band self-join strategy --------------------------------------------
+# Every LSH query's band self-join goes through operators.dedup
+# .band_self_join, which hints SHUFFLE_HASH: the pinned band table has no
+# size statistics (the planner would sort-merge it) and is corpus-sized (a
+# broadcast would not survive real corpora).
+
+_BAND_JOIN_KEYS = {
+    "dedup_near_minhash": "bucket",
+    "dedup_pipeline_e2e": "bucket",
+    "dedup_minhash_jaccard_est": "bucket",
+    "dedup_simhash_hamming": "band, nib",
+    "embed_lsh_hyperplane": "band, nib",
+    "embed_lsh_hyperplane_scaled": "band, bk",
+    "dedup_simhash_scaled": "band, bk",
+}
+
+
+def _edges_of_e2e(spark, sf_dir, monkeypatch):
+    """dedup_pipeline_e2e runs connected components while it is built, so
+    its result plan starts after CC's pins; the band self-join lives in
+    the verified edge frame handed to CC."""
+    from historic_score_etl_pipeline_spark.contract.surface14 import (
+        dedup_pipeline_e2e,
+    )
+    import historic_score_etl_pipeline_spark.operators.graph as graph
+
+    captured = []
+
+    class _Stop(Exception):
+        pass
+
+    def grab(edges, *args, **kwargs):
+        captured.append(edges)
+        raise _Stop
+
+    monkeypatch.setattr(graph, "connected_components", grab)
+    try:
+        dedup_pipeline_e2e(spark, sf_dir)
+    except _Stop:
+        pass
+    return captured[0]
+
+
+def _band_join_strategies(plan: str, keys: str) -> list[str]:
+    """Physical join node names whose left keys are exactly ``keys``."""
+    import re
+
+    plan = re.sub(r"#\d+L?", "", plan)
+    return [
+        m.group(1)
+        for m in re.finditer(
+            r"^\(\d+\) (\w+Join)\nLeft keys \[\d+\]: \[([^\]]*)\]", plan, re.M
+        )
+        if m.group(2) == keys
+    ]
+
+
+def test_lsh_band_self_joins_plan_as_shuffled_hash(spark, sf_oracle, monkeypatch):
+    from historic_score_etl_pipeline_spark import contract
+
+    qs = contract.queries()
+    strategies = {}
+    for name, keys in _BAND_JOIN_KEYS.items():
+        if name == "dedup_pipeline_e2e":
+            df = _edges_of_e2e(spark, sf_oracle, monkeypatch)
+        else:
+            df = qs[name](spark, sf_oracle)
+        strategies[name] = _band_join_strategies(_plan(df), keys)
+    assert strategies == {
+        name: ["ShuffledHashJoin"] for name in _BAND_JOIN_KEYS
+    }, strategies
