@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
-from historic_score_etl_pipeline_spark.operators.pins import pin
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- sequence packing ---------------------------------------------------------
@@ -325,68 +324,20 @@ FROM (
 
 
 def dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full near-dup removal chain composed: LSH candidates →
-    Jaccard-verify (≥ 0.5) → connected components over verified pairs →
-    keep the min-doc_id canonical per cluster → survivors = corpus minus
-    non-canonical cluster members.  Returns per-lang survivor counts.
+    """Per-lang survivor counts of the shipped near-dup removal chain
+    (``operators/dedup.near_dup_survivors``: LSH candidates →
+    Jaccard-verify → connected components → one canonical per cluster).
 
     rows-only: every stage has its own oracle-checked contract entry;
     the composition's SQL twin would be a recursive-CTE fixpoint over a
     quadratic pair table, which is the exact thing the staged plan
     avoids."""
     from historic_score_etl_pipeline_spark.operators.dedup import (
-        band_buckets_from_hashes,
-        band_self_join,
-        jaccard,
-        shingle_hashes,
-        token_hashes,
-    )
-    from historic_score_etl_pipeline_spark.operators.graph import (
-        connected_components,
-    )
-    from historic_score_etl_pipeline_spark.operators.scale import (
-        ensure_parallelism,
+        near_dup_survivors,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # ONE corpus scan + ONE shingle-hash pass, materialized — the
-    # "persisted signature index" of an industrial dedup deployment.
-    # Banding, Jaccard verification and survivorship all derive from this
-    # checkpoint instead of re-scanning/re-hashing the corpus 3×.
-    base = ensure_parallelism(
-        docs.select("doc_id", "lang", "text"), "doc_id"
-    ).select(
-        "doc_id",
-        "lang",
-        shingle_hashes(token_hashes(F.col("text"))).alias("sh"),
-        # LAZY (r11): the first downstream action (CC's edge count)
-        # materializes it — eager spent one extra synchronous job here.
-    )
-    base = pin(base)
-    # banded feeds both self-join sides: pinned so the MinHash banding
-    # over the signature index runs once (see band_self_join)
-    banded = pin(band_buckets_from_hashes(
-        base.select("doc_id", "sh"), "doc_id", "sh"
-    ))
-    pairs = band_self_join(banded, "doc_id", ["bucket"])
-    verified = (
-        pairs.join(
-            base.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            base.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")),
-            "id_b",
-        )
-        .where(jaccard(F.col("sh_a"), F.col("sh_b")) >= 0.5)
-        .select("id_a", "id_b")
-    )
-    clusters = connected_components(verified, "id_a", "id_b")
-    # drop every clustered doc that is not its cluster's canonical (min id)
-    victims = clusters.where(F.col("node") != F.col("comp")).select(
-        F.col("node").alias("doc_id")
-    )
-    survivors = base.select("doc_id", "lang").join(victims, "doc_id", "left_anti")
+    survivors = near_dup_survivors(docs, "doc_id", "text", keep=["lang"])
     return survivors.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
@@ -463,13 +414,14 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible; collision recall is unit-tested with planted
     duplicates (tests/test_surface14.py)."""
     from historic_score_etl_pipeline_spark.operators.dedup import (
-        lsh_candidate_pairs_incremental,
+        band_buckets,
+        band_probe_join,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    existing = docs.where(F.col("doc_id") < 400)
-    new = docs.where(F.col("doc_id") >= 400)
-    pairs = lsh_candidate_pairs_incremental(existing, new, "doc_id", "text")
+    index = band_buckets(docs.where(F.col("doc_id") < 400), "doc_id", "text")
+    probes = band_buckets(docs.where(F.col("doc_id") >= 400), "doc_id", "text")
+    pairs = band_probe_join(probes, index, "doc_id")
     return pairs.groupBy("new_id").agg(
         F.count(F.lit(1)).alias("n_collisions"),
         F.min("existing_id").alias("first_existing_id"),

@@ -259,36 +259,20 @@ def dedup_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc and joined to both pair sides; the md5 base hash keeps the
     whole chain SQL-replayable."""
     from historic_score_etl_pipeline_spark.operators.dedup import (
-        band_buckets_from_hashes,
+        band_buckets_from_sig,
         band_self_join,
-        minhash_mins,
-        shingle_hashes,
-        token_hashes_md5,
-    )
-    from historic_score_etl_pipeline_spark.operators.scale import (
-        ensure_parallelism,
+        minhash_signatures,
+        shingle_hash_table,
     )
 
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents"), "doc_id"
+    sh = shingle_hash_table(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", portable=True
     )
-    # ONE shingle-hash pass shared by the signature build AND the LSH
-    # banding (the expensive stage is the per-token md5; lazily pinned so
-    # both consumers read the same materialized rows — the same sharing
-    # dedup_pipeline_e2e does)
-    sh = pin(
-        docs.select("doc_id", token_hashes_md5("text").alias("th"))
-        .select("doc_id", shingle_hashes(F.col("th")).alias("base"))
-    )
-    # sigs and banded each feed TWO consumers (both pair-side joins /
-    # both self-join sides): pinned lazily so the 32-way MinHash fold and
-    # the banding run once, not twice (see band_self_join)
-    sigs = pin(sh.select(
-        "doc_id", minhash_mins(F.col("base"), 32).alias("sig")
-    ))
-    banded = pin(band_buckets_from_hashes(
-        sh, "doc_id", "base", 32, 8, portable=True
-    ))
+    # sigs feeds the banding and both pair-side joins, banded both
+    # self-join sides: pinned lazily so the 32-way MinHash fold and the
+    # banding each run once per doc (see band_self_join)
+    sigs = pin(minhash_signatures(sh, "doc_id"))
+    banded = pin(band_buckets_from_sig(sigs, "doc_id", portable=True))
     pairs = band_self_join(banded, "doc_id", ["bucket"])
     matches = F.aggregate(
         F.zip_with(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.operators.pins import pin
+from historic_score_etl_pipeline_spark.operators.scale import ensure_parallelism
 
 
 def text_fingerprint(col: Column | str) -> Column:
@@ -84,6 +85,11 @@ _MH_P = (1 << 31) - 1
 _MH_A = [(2 * i * 0x9E3779B9 + 1) % _MH_P for i in range(1, 65)]
 _MH_B = [(i * 0x85EBCA6B) % _MH_P for i in range(1, 65)]
 
+# MinHash signature length and LSH band count of every MinHash chain
+# (8 bands of 4 rows); the DuckDB oracles replay the same numbers
+NUM_HASHES = 32
+BANDS = 8
+
 
 def token_hashes(col: Column | str) -> Column:
     """Per-token 31-bit hashes: each token xxhash64'd ONCE, reduced mod
@@ -122,10 +128,12 @@ def shingle_hashes(th: Column, n: int = 3) -> Column:
     pure integer math, no shingle-string allocation, and each token was
     hashed once (vs. n× when hashing concatenated n-gram strings).
 
-    ``th`` MUST be a materialized column (stage :func:`token_hashes` in a
-    prior ``select``): lambda bodies inline their inputs, so passing the
-    raw token_hashes *expression* here would re-expand it per element
-    access — O(tokens²) work.  Products stay < 2⁶² → ANSI-overflow-safe.
+    ``th`` MUST be a materialized column — build shingle hashes through
+    :func:`shingle_hash_table`, which stages the token hash in a prior
+    ``select``: lambda bodies inline their inputs, so passing the raw
+    token_hashes *expression* here would re-split and re-hash the text
+    per element access — O(tokens²) work.  Products stay < 2⁶² →
+    ANSI-overflow-safe.
     """
     idx = F.sequence(F.lit(0), F.greatest(F.size(th) - n, F.lit(0)))
     combined = F.transform(
@@ -174,56 +182,60 @@ def minhash_mins(base: Column, num_hashes: int = 32) -> Column:
     )
 
 
-def band_buckets(
+def shingle_hash_table(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
+    keep: Sequence[str] = (),
     portable: bool = False,
 ) -> DataFrame:
-    """(id, bucket) rows: the LSH band index of each document — ``bands``
+    """(id, *keep, sh) rows: each document's distinct shingle hashes — the
+    one hashing stage of the MinHash chain.  ``portable=True`` hashes
+    tokens with md5 (:func:`token_hashes_md5`) so an external SQL oracle
+    can replay the chain exactly."""
+    cols = [id_col, *keep]
+    # CPU-heavy per-row work: make sure it spreads across cores even when
+    # the source is one small parquet file (at 100 TB the scan itself
+    # yields enough splits and this repartition collapses to a no-op check)
+    df = ensure_parallelism(df.select(*cols, text_col), id_col)
+    # two staged projections (token hash → shingle combine): each stage
+    # references the previous as a materialized column, so nothing is
+    # inlined/recomputed per element
+    hasher = token_hashes_md5 if portable else token_hashes
+    return df.select(*cols, hasher(text_col).alias("th")).select(
+        *cols, shingle_hashes(F.col("th")).alias("sh")
+    )
+
+
+def minhash_signatures(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id, sig) rows: the ``NUM_HASHES``-member MinHash signature of each
+    :func:`shingle_hash_table` row."""
+    return sh.select(id_col, minhash_mins(F.col("sh"), NUM_HASHES).alias("sig"))
+
+
+def band_buckets(
+    df: DataFrame, id_col: str, text_col: str, portable: bool = False
+) -> DataFrame:
+    """(id, bucket) rows: the LSH band index of each document — ``BANDS``
     rows per doc, bucket = hash of (band number, that band's signature
     slice).  This is the persisted "signature index" of an incremental
     dedup deployment: computed once per doc, stored partitioned by
     bucket.  ``portable=True`` swaps both hash sites to md5
     (:func:`token_hashes_md5` + an md5 bucket key) so an external SQL
     oracle can replay the chain exactly."""
-    from historic_score_etl_pipeline_spark.operators.scale import ensure_parallelism
-
-    # CPU-heavy per-row work: make sure it spreads across cores even when
-    # the source is one small parquet file (at 100 TB the scan itself
-    # yields enough splits and this repartition collapses to a no-op check)
-    df = ensure_parallelism(df, id_col)
-    # two staged projections (token hash → shingle combine): each stage
-    # references the previous as a materialized column, so nothing is
-    # inlined/recomputed per element
-    hasher = token_hashes_md5 if portable else token_hashes
-    sh = df.select(
-        F.col(id_col), hasher(text_col).alias("th")
-    ).select(F.col(id_col), shingle_hashes(F.col("th")).alias("mh_base"))
-    return band_buckets_from_hashes(
-        sh, id_col, "mh_base", num_hashes, bands, portable
-    )
+    sh = shingle_hash_table(df, id_col, text_col, portable=portable)
+    return band_buckets_from_sig(minhash_signatures(sh, id_col), id_col, portable)
 
 
-def band_buckets_from_hashes(
-    sh: DataFrame,
-    id_col: str,
-    hash_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    portable: bool = False,
+def band_buckets_from_sig(
+    sigs: DataFrame, id_col: str, portable: bool = False
 ) -> DataFrame:
-    """Band buckets from a PRECOMPUTED shingle-hash array column — the
-    entry point when the shingle pass is shared with a verify stage
-    (dedup_pipeline_e2e persists one signature-base and derives banding,
-    Jaccard verification and survivorship from it: one corpus scan, one
-    hash pass)."""
-    rows_per_band = num_hashes // bands
-    return sh.select(
-        F.col(id_col), minhash_mins(F.col(hash_col), num_hashes).alias("sig")
-    ).select(
+    """Band buckets from a PRECOMPUTED signature column ``sig`` — the
+    entry point when the signature is shared with another consumer
+    (``dedup_minhash_jaccard_est`` compares signatures of the candidate
+    pairs it bands: one MinHash fold per doc)."""
+    rows_per_band = NUM_HASHES // BANDS
+    return sigs.select(
         id_col,
         F.posexplode(
             F.array(
@@ -234,7 +246,7 @@ def band_buckets_from_hashes(
                             "vals"
                         ),
                     )
-                    for b in range(bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("pos", "bandrow"),
@@ -317,22 +329,15 @@ def band_self_join(
 
 
 def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    portable: bool = False,
+    df: DataFrame, id_col: str, text_col: str, portable: bool = False
 ) -> DataFrame:
     """MinHash+LSH near-dup candidates.
 
-    signature → split into ``bands`` rows of ``num_hashes/bands`` values →
+    signature → split into ``BANDS`` rows of ``NUM_HASHES/BANDS`` values →
     :func:`band_self_join` on the bucket key.  Returns (id_a, id_b) with
     id_a < id_b.
     """
-    banded = pin(band_buckets(
-        df, id_col, text_col, num_hashes, bands, portable
-    ))
+    banded = pin(band_buckets(df, id_col, text_col, portable))
     return band_self_join(banded, id_col, ["bucket"])
 
 
@@ -369,38 +374,74 @@ def hamming16_pairs(
     ).where(F.col("hamming") <= max_dist)
 
 
-def lsh_candidate_pairs_incremental(
-    existing: DataFrame,
-    new: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """Incremental near-dup check: each NEW doc against the EXISTING
-    corpus only — the arriving-batch shape of a production dedup service.
+def band_probe_join(probes: DataFrame, index: DataFrame, id_col: str) -> DataFrame:
+    """Incremental near-dup check: each PROBE doc's band buckets against
+    a persisted band INDEX (both :func:`band_buckets` tables) — the
+    arriving-batch shape of a production dedup service.  At 100 TB the
+    index is stored bucket-partitioned, so this join co-locates without
+    a shuffle of the index.
 
-    The existing side's band buckets are the persisted signature index
-    (``band_buckets``; at 100 TB stored bucket-partitioned so this join
-    co-locates without a shuffle of the index).  Only new×existing
-    collisions are produced — never existing×existing (already
-    adjudicated in earlier batches) and never new×new (callers run
-    ``lsh_candidate_pairs`` on the batch for that).  Cost per batch is
-    O(|new| × bands) probe rows, independent of corpus size.
+    Only probe×index collisions are produced — never index×index (already
+    adjudicated in earlier batches) and never probe×probe (callers
+    :func:`band_self_join` the probes for that).  Cost per batch is
+    O(|probes| × bands) probe rows, independent of corpus size.  An id on
+    both sides (a replayed batch whose buckets already reached the index)
+    never pairs with itself.
 
     Returns (new_id, existing_id) distinct pairs.
     """
-    idx = band_buckets(existing, id_col, text_col, num_hashes, bands)
-    probes = band_buckets(new, id_col, text_col, num_hashes, bands)
+    n, e = probes.alias("n"), index.alias("e")
     return (
-        probes.alias("n")
-        .join(idx.alias("e"), F.col("n.bucket") == F.col("e.bucket"))
+        n.join(e, F.col("n.bucket") == F.col("e.bucket"))
+        .where(F.col(f"n.{id_col}") != F.col(f"e.{id_col}"))
         .select(
             F.col(f"n.{id_col}").alias("new_id"),
             F.col(f"e.{id_col}").alias("existing_id"),
         )
         .distinct()
     )
+
+
+def near_dup_survivors(
+    df: DataFrame, id_col: str, text_col: str, keep: Sequence[str]
+) -> DataFrame:
+    """The shipped near-dup removal chain: LSH candidates → Jaccard verify
+    (≥ 0.5) over shingle hashes → connected components over verified
+    pairs → keep the min-id canonical per cluster.  Returns the surviving
+    ``(id, *keep)`` rows: the corpus minus every non-canonical cluster
+    member."""
+    from historic_score_etl_pipeline_spark.operators.graph import (
+        connected_components,
+    )
+
+    # ONE corpus scan + ONE shingle-hash pass, pinned — the "persisted
+    # signature index" of an industrial dedup deployment.  Banding, Jaccard
+    # verification and survivorship all derive from it instead of
+    # re-scanning/re-hashing the corpus 3×.  LAZY: the first downstream
+    # action (CC's edge count) materializes it.
+    base = pin(shingle_hash_table(df, id_col, text_col, keep))
+    # banded feeds both self-join sides: pinned so the MinHash banding
+    # over the signature index runs once (see band_self_join)
+    banded = pin(band_buckets_from_sig(minhash_signatures(base, id_col), id_col))
+    pairs = band_self_join(banded, id_col, ["bucket"])
+
+    def side(s: str) -> DataFrame:
+        return base.select(
+            F.col(id_col).alias(f"id_{s}"), F.col("sh").alias(f"sh_{s}")
+        )
+
+    verified = (
+        pairs.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .where(jaccard(F.col("sh_a"), F.col("sh_b")) >= 0.5)
+        .select("id_a", "id_b")
+    )
+    clusters = connected_components(verified, "id_a", "id_b")
+    # drop every clustered doc that is not its cluster's canonical (min id)
+    victims = clusters.where(F.col("node") != F.col("comp")).select(
+        F.col("node").alias(id_col)
+    )
+    return base.select(id_col, *keep).join(victims, id_col, "left_anti")
 
 
 def _simhash_majority(hashes: Column, n_bits: int) -> Column:
@@ -454,8 +495,6 @@ def near_dup_jaccard(
     threshold.  ``sample_mod`` optionally thins the left side for cost
     control.  At scale, prefer lsh_candidate_pairs to generate the pairs
     and use this only as the verify stage."""
-    from historic_score_etl_pipeline_spark.operators.scale import ensure_parallelism
-
     base = ensure_parallelism(df, id_col).select(
         F.col(id_col),
         *[F.col(c) for c in bucket_cols],

@@ -409,17 +409,19 @@ def run_incremental_dedup(
     Per micro-batch (foreachBatch):
     1. probe the arriving docs' band buckets against the PERSISTED index
        (``{work_dir}/index``) — new×existing collisions only;
-    2. also self-check the batch (``lsh_candidate_pairs``) for
-       intra-batch dups;
+    2. also self-check the batch for intra-batch dups
+       (``band_self_join`` over the same band table: the arrival's
+       buckets are built once, persisted for the batch, and feed the
+       probe, the self-check and the index write);
     3. append the batch's flagged pairs to ``{work_dir}/flagged`` and the
        surviving docs' buckets to the index, both keyed by batch id via
        the idempotent writer — a replayed batch overwrites its own
        output, so crash+resume never double-inserts index rows.  The
        probe additionally EXCLUDES the current batch's own index
-       partition and id self-pairs: a crash between the index write and
-       the checkpoint commit replays the batch against an index that
-       already contains its buckets, which would otherwise flag every
-       doc as a duplicate of itself.
+       partition, and ``band_probe_join`` drops id self-pairs: a crash
+       between the index write and the checkpoint commit replays the
+       batch against an index that already contains its buckets, which
+       would otherwise flag every doc as a duplicate of itself.
 
     State is the parquet index itself — bucket-partitionable, mergeable,
     no in-memory store to size; at 100 TB the index is just another
@@ -434,7 +436,8 @@ def run_incremental_dedup(
 
     from historic_score_etl_pipeline_spark.operators.dedup import (
         band_buckets,
-        lsh_candidate_pairs,
+        band_probe_join,
+        band_self_join,
     )
     from historic_score_etl_pipeline_spark.sinks.writer import retried_write
 
@@ -450,10 +453,11 @@ def run_incremental_dedup(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
+        probes = band_buckets(batch_df, id_col, text_col).persist()
         try:
-            probes = band_buckets(batch_df, id_col, text_col)
-            flagged = None
+            flagged = band_self_join(probes, id_col, ["bucket"]).select(
+                F.col("id_b").alias("new_id"), F.col("id_a").alias("existing_id")
+            )
             def _part_id(dirname: str) -> int | None:
                 try:
                     return int(dirname.split("=", 1)[1])
@@ -479,26 +483,13 @@ def run_incremental_dedup(
                 idx = spark.read.parquet(index_dir).where(
                     F.col("batch_id").cast("long") < F.lit(batch_id)
                 )
-                flagged = (
-                    probes.alias("n")
-                    .join(idx.alias("e"), F.col("n.bucket") == F.col("e.bucket"))
-                    .where(F.col(f"n.{id_col}") != F.col(f"e.{id_col}"))
-                    .select(
-                        F.col(f"n.{id_col}").alias("new_id"),
-                        F.col(f"e.{id_col}").alias("existing_id"),
-                    )
-                    .distinct()
-                )
-            intra = lsh_candidate_pairs(batch_df, id_col, text_col).select(
-                F.col("id_b").alias("new_id"), F.col("id_a").alias("existing_id")
-            )
-            flagged = intra if flagged is None else flagged.unionByName(intra)
+                flagged = band_probe_join(probes, idx, id_col).unionByName(flagged)
             if not retried_write(flagged, flagged_dir, batch_id=str(batch_id)):
                 raise RuntimeError(f"flagged write failed, batch {batch_id}")
             if not retried_write(probes, index_dir, batch_id=str(batch_id)):
                 raise RuntimeError(f"index write failed, batch {batch_id}")
         finally:
-            batch_df.unpersist()
+            probes.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(process_batch)

@@ -3,6 +3,7 @@ fixpoint, fingerprint stability."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.operators.dedup import (
@@ -11,9 +12,14 @@ from historic_score_etl_pipeline_spark.operators.dedup import (
     jaccard,
     lsh_candidate_pairs,
     near_dup_jaccard,
+    shingle_hash_table,
+    shingle_hashes,
     shingles,
     text_fingerprint,
+    token_hashes,
+    token_hashes_md5,
 )
+from historic_score_etl_pipeline_spark.operators.pins import explain_str
 
 
 def _docs_with_dups(spark):
@@ -119,3 +125,32 @@ def test_band_self_join_carries_both_sides(spark):
     assert out.columns == ["id_a", "id_b", "sig_a", "sig_b"]
     for r in out.collect():
         assert (r.sig_a, r.sig_b) == (10 * r.id_a, 10 * r.id_b)
+
+
+# --- shingle_hash_table: the one hashing stage ---------------------------------
+
+
+@pytest.mark.parametrize("portable", [False, True])
+def test_shingle_hash_table_hashes_each_token_once(spark, portable):
+    """The token split appears once in the plan (the shingle combine reads
+    the staged token-hash column, never the inlined expression), and the
+    shingle hashes equal the explicitly staged two-projection chain."""
+    docs = spark.createDataFrame(
+        [
+            (1, "  Spark shuffles\tpartition data across the cluster  "),
+            (2, "two words"),
+            (3, ""),
+            (4, "a b c d a b c d"),
+        ],
+        "doc_id long, text string",
+    )
+    sh = shingle_hash_table(docs, "doc_id", "text", portable=portable)
+    assert explain_str(sh).count("split(lower(regexp_replace(") == 1
+
+    hasher = token_hashes_md5 if portable else token_hashes
+    staged = docs.select("doc_id", hasher("text").alias("th")).select(
+        "doc_id", shingle_hashes(F.col("th")).alias("sh")
+    )
+    assert {r.doc_id: r.sh for r in sh.collect()} == {
+        r.doc_id: r.sh for r in staged.collect()
+    }

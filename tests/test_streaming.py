@@ -278,6 +278,7 @@ def test_incremental_dedup_stream_flags_cross_batch_duplicate(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from historic_score_etl_pipeline_spark.operators import pins
     from historic_score_etl_pipeline_spark.streaming import (
         run_incremental_dedup,
     )
@@ -297,7 +298,11 @@ def test_incremental_dedup_stream_flags_cross_batch_duplicate(spark, tmp_path):
     _time.sleep(1.1)  # file-source ordering is mtime-based
     pq.write_table(batch2, landing / "b2.parquet")
 
+    n_pins = len(pins._PINNED)
     run_incremental_dedup(spark, str(landing), work)
+    # the arrival's band table is persisted for its batch only: no pin
+    # outlives the loop
+    assert len(pins._PINNED) == n_pins
 
     flagged = spark.read.parquet(f"{work}/flagged")
     pairs = {(r["new_id"], r["existing_id"]) for r in flagged.collect()}

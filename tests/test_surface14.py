@@ -150,7 +150,8 @@ def test_incremental_lsh_finds_planted_duplicate(spark):
     collide with it (identical signature → every band matches); an
     unrelated doc must not collide with anything."""
     from historic_score_etl_pipeline_spark.operators.dedup import (
-        lsh_candidate_pairs_incremental,
+        band_buckets,
+        band_probe_join,
     )
 
     existing = spark.createDataFrame(
@@ -167,10 +168,36 @@ def test_incremental_lsh_finds_planted_duplicate(spark):
         ],
         ["doc_id", "text"],
     )
-    pairs = lsh_candidate_pairs_incremental(existing, new, "doc_id", "text")
+    pairs = band_probe_join(
+        band_buckets(new, "doc_id", "text"),
+        band_buckets(existing, "doc_id", "text"),
+        "doc_id",
+    )
     got = {(r["new_id"], r["existing_id"]) for r in pairs.collect()}
     assert (10, 1) in got
     assert not any(n == 11 for n, _ in got)
+
+
+def test_band_probe_join_never_pairs_an_id_with_itself(spark):
+    """A replayed batch whose buckets already reached the index: the id
+    on both sides shares every bucket with itself, yet only the real
+    duplicate is flagged."""
+    from historic_score_etl_pipeline_spark.operators.dedup import (
+        band_buckets,
+        band_probe_join,
+    )
+
+    text = "spark shuffles partition data across the cluster by key"
+    index = band_buckets(
+        spark.createDataFrame([(1, text), (10, text)], ["doc_id", "text"]),
+        "doc_id",
+        "text",
+    )
+    probes = band_buckets(
+        spark.createDataFrame([(10, text)], ["doc_id", "text"]), "doc_id", "text"
+    )
+    got = {tuple(r) for r in band_probe_join(probes, index, "doc_id").collect()}
+    assert got == {(10, 1)}
 
 
 def test_incremental_lsh_never_pairs_existing_with_existing(spark, sf_oracle):
