@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.text import pack_shards
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- sequence packing ---------------------------------------------------------
@@ -47,33 +48,9 @@ _SHARD_TOKENS = 2048  # token budget per training shard
 
 
 def text_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pack documents into fixed-token-budget shards per language.
-
-    Docs are ordered deterministically (doc_id) inside each language,
-    token counts cumsum'd, and a doc lands in shard
-    ``floor(exclusive_cumsum / budget)`` — the standard concat-then-chunk
-    pretraining layout.  One hash shuffle on ``lang``; at 100 TB the
-    window state is one running long per partition."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        docs.withColumn("n_tokens", toks)
-        .withColumn("cum_tokens", F.sum("n_tokens").over(w))
-        .select(
-            "doc_id",
-            "lang",
-            "n_tokens",
-            F.floor(
-                (F.col("cum_tokens") - F.col("n_tokens"))
-                / F.lit(_SHARD_TOKENS)
-            ).alias("shard_id"),
-        )
-    )
+    """Pack documents into ``_SHARD_TOKENS``-token shards per language
+    (:func:`operators.text.pack_shards`)."""
+    return pack_shards(load_table(spark, sf_dir, "documents"), _SHARD_TOKENS)
 
 
 TEXT_PACK_SHARDS_SQL = f"""

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.similarity import micro_units
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- ordered funnel conversion ------------------------------------------------
@@ -313,14 +314,7 @@ def embed_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = emb.select(
         "vec_id",
         "label",
-        F.posexplode(
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast(
-                    "long"
-                ),
-            )
-        ).alias("pos", "v"),
+        F.posexplode(micro_units(F.col("embedding"))).alias("pos", "v"),
     )
     cent = comp.groupBy("label", "pos").agg(
         F.sum("v").alias("s"), F.count(F.lit(1)).alias("n")

@@ -34,7 +34,11 @@ from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
-from historic_score_etl_pipeline_spark.operators.similarity import valid_vectors
+from historic_score_etl_pipeline_spark.operators.similarity import (
+    micro_unit,
+    micro_units,
+    valid_vectors,
+)
 
 # --- struct-accumulator fold over embeddings --------------------------------------
 
@@ -45,14 +49,10 @@ def hof_reduce_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (element, index) lambda, the other two ride ONE aggregate with a
     struct accumulator."""
     emb = valid_vectors(load_table(spark, sf_dir, "embeddings"))
-    fx = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
+    fx = micro_units("embedding")
     wterm = F.transform(
         "embedding",
-        lambda x, i: (i.cast("long") + 1)
-        * F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
+        lambda x, i: (i.cast("long") + 1) * micro_unit(x),
     )
     zero = F.struct(
         F.lit(0).cast("long").alias("s"), F.lit(0).cast("long").alias("q")

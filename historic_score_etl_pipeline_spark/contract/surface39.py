@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.similarity import micro_units
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- truncated-copy dedup ---------------------------------------------------------
@@ -215,14 +216,7 @@ def embed_dim_stats_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n/Σ/Σ²/min/max per embedding dimension, integer micro-units."""
     emb = load_table(spark, sf_dir, "embeddings")
     comp = emb.select(
-        F.posexplode(
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast(
-                    "long"
-                ),
-            )
-        ).alias("dim", "v")
+        F.posexplode(micro_units("embedding")).alias("dim", "v")
     )
     return comp.groupBy(F.col("dim").cast("long").alias("dim")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -266,14 +260,7 @@ def embed_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = emb.select(
         "vec_id",
         "label",
-        F.posexplode(
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast(
-                    "long"
-                ),
-            )
-        ).alias("pos", "v"),
+        F.posexplode(micro_units("embedding")).alias("pos", "v"),
     )
     cent = comp.groupBy(F.col("label").alias("clabel"), "pos").agg(
         F.sum("v").alias("s"), F.count(F.lit(1)).alias("cn")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.similarity import micro_units
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- corpus-unigram surprisal per doc ---------------------------------------------
@@ -217,14 +218,7 @@ def embed_zscore_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     comp = emb.select(
         "vec_id",
-        F.posexplode(
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast(
-                    "long"
-                ),
-            )
-        ).alias("dim", "v"),
+        F.posexplode(micro_units("embedding")).alias("dim", "v"),
     )
     stats = comp.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),

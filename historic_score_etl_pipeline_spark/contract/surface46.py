@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.similarity import micro_units
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- Dunning LLR collocations -----------------------------------------------------
@@ -269,12 +270,7 @@ def dedup_embed_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     csv = F.concat_ws(
         ",",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast(
-                "long"
-            ),
-        ),
+        micro_units("embedding"),
     )
     return (
         emb.select("vec_id", F.md5(csv).alias("vfp"))

@@ -40,7 +40,10 @@ from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.operators.dedup import hamming16_pairs
 from historic_score_etl_pipeline_spark.operators.pins import pin
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
-from historic_score_etl_pipeline_spark.operators.similarity import valid_vectors
+from historic_score_etl_pipeline_spark.operators.similarity import (
+    micro_units,
+    valid_vectors,
+)
 
 # --- SRP-LSH over embeddings -------------------------------------------------------
 
@@ -70,10 +73,7 @@ def embed_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("hp")
     )
-    q = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
+    q = micro_units("embedding")
     # sig bit b = [ Σᵢ qᵢ·sign(b,i) > 0 ]  (exact integer dot product)
     sig_col = F.aggregate(
         F.sequence(F.lit(0), F.lit(_SRP_BITS - 1)),

@@ -19,7 +19,7 @@ oracled image perceptual hash:
   doubles agree bit-for-bit) and the result is micro-fixpointed.
 * ``multimodal_image_ahash`` — perceptual average-hash over REAL
   decoded BMPs (render → encode → decode → integer aHash in
-  mapInPandas/numpy); the DuckDB oracle replays the pixels
+  one ``doc_rows`` pass); the DuckDB oracle replays the pixels
   arithmetically from the text bytes (render_text_bmp cycles utf-8
   bytes through the grid), so a mangled header/padding/row-order
   anywhere in the codec path breaks the hash — decode is END-TO-END
@@ -40,7 +40,10 @@ from pyspark.sql.window import Window
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.operators.multimodal import image_ahash
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
-from historic_score_etl_pipeline_spark.operators.similarity import valid_vectors
+from historic_score_etl_pipeline_spark.operators.similarity import (
+    micro_units,
+    valid_vectors,
+)
 
 # --- DISTINCT aggregates -----------------------------------------------------------
 
@@ -142,10 +145,7 @@ def embed_prefix_topk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per query (vec_id < 10): top-5 corpus neighbors by 16-dim-prefix
     integer dot vs full 64-dim dot, and the overlap size."""
     emb = valid_vectors(load_table(spark, sf_dir, "embeddings"))
-    fx = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
+    fx = micro_units("embedding")
     q = emb.where(F.col("vec_id") < _PFX_NQ).select(
         F.col("vec_id").alias("q_id"), fx.alias("qv")
     )

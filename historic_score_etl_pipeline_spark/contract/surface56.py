@@ -30,11 +30,17 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    rendered_samples,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- 2-hop BFS frontiers -----------------------------------------------------------
@@ -133,49 +139,21 @@ _FRAME = 64
 
 def multimodal_audio_frame_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL WAV decode → 64-sample frames → integer energy/peak per
-    frame (operators.codecs.decode_wav inside Arrow batches)."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.types import LongType, StructField, StructType
+    frame."""
 
-    from historic_score_etl_pipeline_spark.operators.codecs import decode_wav
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        render_text_wav,
-    )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("frame_idx", LongType()),
-            StructField("n_samples", LongType()),
-            StructField("energy", LongType()),
-            StructField("peak", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in schema.fieldNames()}
-            for did, t in zip(pdf["doc_id"], pdf["text"]):
-                samples, _sr = decode_wav(render_text_wav(t or ""))
-                samples = samples.reshape(-1)
-                s = samples.astype(np.int64)
-                for f in range(0, (len(s) + _FRAME - 1) // _FRAME):
-                    fr = s[f * _FRAME : (f + 1) * _FRAME]
-                    out["media_id"].append(int(did))
-                    out["frame_idx"].append(f)
-                    out["n_samples"].append(len(fr))
-                    out["energy"].append(int((fr * fr).sum()))
-                    out["peak"].append(int(np.abs(fr).max()))
-            yield pd.DataFrame(out)
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def frames(text):
+        s = rendered_samples(text)
+        for f in range(0, (len(s) + _FRAME - 1) // _FRAME):
+            fr = s[f * _FRAME : (f + 1) * _FRAME]
+            yield f, len(fr), int((fr * fr).sum()), int(np.abs(fr).max())
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id", "text").mapInPandas(batches, schema)
+    return doc_rows(
+        docs,
+        "doc_id",
+        frames,
+        "media_id long, frame_idx long, n_samples long, energy long, peak long",
+    )
 
 
 MULTIMODAL_AUDIO_FRAME_RMS_SQL = f"""

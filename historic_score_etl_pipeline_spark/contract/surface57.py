@@ -35,7 +35,10 @@ from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
-from historic_score_etl_pipeline_spark.operators.similarity import valid_vectors
+from historic_score_etl_pipeline_spark.operators.similarity import (
+    micro_units,
+    valid_vectors,
+)
 
 # --- manifest-driven scan ----------------------------------------------------------
 
@@ -267,10 +270,7 @@ def embed_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("cb")
     )
-    q = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
+    q = micro_units("embedding")
     base = emb.crossJoin(F.broadcast(cb)).select(
         F.col("vec_id").cast("long").alias("vec_id"), q.alias("q"), "cb"
     )

@@ -36,7 +36,10 @@ from pyspark.sql.window import Window
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.contract.surface57 import _pq_cent
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
-from historic_score_etl_pipeline_spark.operators.similarity import valid_vectors
+from historic_score_etl_pipeline_spark.operators.similarity import (
+    micro_units,
+    valid_vectors,
+)
 
 # --- ADC top-k over PQ codes -------------------------------------------------------
 
@@ -62,13 +65,6 @@ def _codebook(spark: SparkSession):
     )
 
 
-def _fx():
-    return F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
-
-
 def embed_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 by ADC (LUT-summed PQ distance) vs exact integer L2."""
     # Malformed (NULL / NULL-element) embeddings quarantined on BOTH
@@ -78,10 +74,10 @@ def embed_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = valid_vectors(load_table(spark, sf_dir, "embeddings"))
     cb = _codebook(spark)
     qs = emb.where(F.col("vec_id") < _ADC_NQ).select(
-        F.col("vec_id").alias("q_id"), _fx().alias("qv")
+        F.col("vec_id").alias("q_id"), micro_units("embedding").alias("qv")
     )
     corpus = emb.where(F.col("vec_id") >= _ADC_NQ).select(
-        F.col("vec_id").alias("c_id"), _fx().alias("cv")
+        F.col("vec_id").alias("c_id"), micro_units("embedding").alias("cv")
     )
 
     def _sub_dist(vec_col, b, c):

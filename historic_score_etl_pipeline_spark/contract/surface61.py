@@ -33,11 +33,18 @@ groupBys.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    gray,
+    rendered_image,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- bucketed numeric band join ----------------------------------------------------
@@ -179,56 +186,21 @@ FROM running GROUP BY user_id
 
 # --- decoded-pixel grayscale histogram ----------------------------------------------
 
-_HIST_BINS = 16
-
 
 def multimodal_pixel_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bin grayscale histogram over REAL decoded BMP pixels,
     aggregated per source (gray = (R+G+B) div 3, bin = gray div 16)."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        decode_image,
-        render_text_bmp,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("bin", LongType()),
-            StructField("n_px", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                img = decode_image(render_text_bmp(t or ""))
-                gray = img.astype(np.int64).sum(axis=2) // 3
-                bins, counts = np.unique(gray // 16, return_counts=True)
-                for b, c in zip(bins, counts):
-                    acc[(src, int(b))] = acc.get((src, int(b)), 0) + int(c)
-            yield pd.DataFrame(
-                {
-                    "source": [k[0] for k in acc],
-                    "bin": [k[1] for k in acc],
-                    "n_px": list(acc.values()),
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def hist(text):
+        g = gray(rendered_image(text))
+        bins, counts = np.unique(g // 16, return_counts=True)
+        return zip(bins.tolist(), counts.tolist())
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
-    # per-partition partials → global merge (map-side combine shape)
-    return partial.groupBy("source", "bin").agg(
-        F.sum("n_px").cast("long").alias("n_px")
+    return (
+        doc_rows(docs, "source", hist, "source string, bin long, n_px long")
+        .groupBy("source", "bin")
+        .agg(F.sum("n_px").cast("long").alias("n_px"))
     )
 
 

@@ -31,10 +31,16 @@ itself on (user, day+N).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    rendered_samples,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- Holt smoothing via WITH RECURSIVE ----------------------------------------------
@@ -264,45 +270,20 @@ FROM folded
 def multimodal_audio_zero_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-change count over REAL decoded WAV samples (zero counts
     as positive — pinned), plus the max |sample|."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    from historic_score_etl_pipeline_spark.operators.codecs import decode_wav
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        render_text_wav,
-    )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("n_samples", LongType()),
-            StructField("zero_crossings", LongType()),
-            StructField("peak", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in schema.fieldNames()}
-            for did, t in zip(pdf["doc_id"], pdf["text"]):
-                samples, _sr = decode_wav(render_text_wav(t or ""))
-                s = samples.reshape(-1).astype(np.int64)
-                sign = np.where(s >= 0, 1, -1)  # zero counts as positive
-                zc = int((sign[1:] != sign[:-1]).sum()) if len(s) > 1 else 0
-                out["media_id"].append(int(did))
-                out["n_samples"].append(len(s))
-                out["zero_crossings"].append(zc)
-                out["peak"].append(int(np.abs(s).max()) if len(s) else 0)
-            yield pd.DataFrame(out)
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def crossings(text):
+        s = rendered_samples(text)
+        sign = np.where(s >= 0, 1, -1)  # zero counts as positive
+        zc = int((sign[1:] != sign[:-1]).sum()) if len(s) > 1 else 0
+        return [(len(s), zc, int(np.abs(s).max()) if len(s) else 0)]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id", "text").mapInPandas(batches, schema)
+    return doc_rows(
+        docs,
+        "doc_id",
+        crossings,
+        "media_id long, n_samples long, zero_crossings long, peak long",
+    )
 
 
 MULTIMODAL_AUDIO_ZERO_CROSSINGS_SQL = """

@@ -38,7 +38,10 @@ from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
-from historic_score_etl_pipeline_spark.operators.similarity import valid_vectors
+from historic_score_etl_pipeline_spark.operators.similarity import (
+    micro_units,
+    valid_vectors,
+)
 
 # --- named WINDOW clause reuse -------------------------------------------------------
 
@@ -183,10 +186,7 @@ def embed_metric_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame
     ELEMENT diverges outright (list_sum skips it, F.aggregate
     propagates)."""
     emb = valid_vectors(load_table(spark, sf_dir, "embeddings"))
-    fx = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
+    fx = micro_units("embedding")
     q = emb.where(F.col("vec_id") < _RC_NQ).select(
         F.col("vec_id").alias("q_id"), fx.alias("qv")
     )

@@ -23,7 +23,7 @@ neighbor link prediction, recency-decay sampling, 4-4-5 retail calendar:
   since a pinned Monday anchor fold into 13-week quarters split
   4+4+5, orders rolled up per fiscal (year, period).
 
-Scale notes: tile means are mapInPandas partials + a tiny
+Scale notes: tile means are ``doc_rows`` partials + a tiny
 (source×4)-row merge; LCP windows partition by first character
 (vocabulary-sized input, extend the prefix for wider fan-out); link
 prediction joins only the 3 seed rows' neighborhoods (broadcast
@@ -34,12 +34,19 @@ then one small groupBy.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.contract.surface56 import _co_order_edges
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    gray,
+    rendered_image,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- 2x2 tile mean intensity ----------------------------------------------------------
@@ -49,61 +56,21 @@ def multimodal_image_tile_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source and 2×2 tile quadrant: pixel count, gray sum and
     integer mean over real decoded BMPs (gray = (R+G+B) div 3;
     tile_r = row·2 div h, tile_c = col·2 div w)."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        decode_image,
-        render_text_bmp,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("tile_r", LongType()),
-            StructField("tile_c", LongType()),
-            StructField("n_px", LongType()),
-            StructField("sum_gray", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                img = decode_image(render_text_bmp(t or ""))
-                h, w = img.shape[0], img.shape[1]
-                gray = img.astype(np.int64).sum(axis=2) // 3
-                tr = (np.arange(h)[:, None] * 2) // h
-                tc = (np.arange(w)[None, :] * 2) // w
-                tile = tr * 2 + tc  # 0..3
-                for q in range(4):
-                    m = tile == q
-                    k = (src, q // 2, q % 2)
-                    n, s = int(m.sum()), int(gray[m].sum())
-                    if n:
-                        pn, ps = acc.get(k, (0, 0))
-                        acc[k] = (pn + n, ps + s)
-            yield pd.DataFrame(
-                {
-                    "source": [k[0] for k in acc],
-                    "tile_r": [k[1] for k in acc],
-                    "tile_c": [k[2] for k in acc],
-                    "n_px": [v[0] for v in acc.values()],
-                    "sum_gray": [v[1] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def tiles(text):
+        g = gray(rendered_image(text))
+        h, w = g.shape
+        tile = (np.arange(h)[:, None] * 2) // h * 2 + (np.arange(w)[None, :] * 2) // w
+        for q in range(4):
+            m = tile == q
+            if m.any():
+                yield q // 2, q % 2, int(m.sum()), int(g[m].sum())
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
+    schema = "source string, tile_r long, tile_c long, n_px long, sum_gray long"
     return (
-        partial.groupBy("source", "tile_r", "tile_c")
+        doc_rows(docs, "source", tiles, schema)
+        .groupBy("source", "tile_r", "tile_c")
         .agg(
             F.sum("n_px").cast("long").alias("n_px"),
             F.sum("sum_gray").cast("long").alias("sum_gray"),

@@ -41,7 +41,10 @@ from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
-from historic_score_etl_pipeline_spark.operators.similarity import valid_vectors
+from historic_score_etl_pipeline_spark.operators.similarity import (
+    micro_units,
+    valid_vectors,
+)
 
 # --- concurrency duration histogram ---------------------------------------------------
 
@@ -116,10 +119,7 @@ def embed_knn_graph_octant(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the sign octant of the first 4 dimensions (16 buckets) — the
     kNN-graph substrate for clustering/dedup, bucket-local by design."""
     emb = valid_vectors(load_table(spark, sf_dir, "embeddings"))
-    q = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
+    q = micro_units("embedding")
     bucket = (
         F.when(F.element_at("q", 1) > 0, 1).otherwise(0)
         + F.when(F.element_at("q", 2) > 0, 2).otherwise(0)

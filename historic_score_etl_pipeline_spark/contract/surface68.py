@@ -36,11 +36,17 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    rendered_samples,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- lag-1 autocorrelation (exact terms) ----------------------------------------------
@@ -200,72 +206,21 @@ def multimodal_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame
     """Per source over real decoded WAVs: total samples, samples
     trimmed as leading/trailing silence (|s| < 4096), voiced span kept,
     and fully-silent clip count."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from historic_score_etl_pipeline_spark.operators.codecs import decode_wav
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        render_text_wav,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("n_samples", LongType()),
-            StructField("n_lead", LongType()),
-            StructField("n_trail", LongType()),
-            StructField("n_kept", LongType()),
-            StructField("n_all_silent", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                samples, _sr = decode_wav(render_text_wav(t or ""))
-                s = samples.reshape(-1).astype(np.int64)
-                n = len(s)
-                voiced = np.nonzero(np.abs(s) >= _SILENCE_TH)[0]
-                if len(voiced) == 0:
-                    lead, trail, kept, allsil = n, 0, 0, 1
-                else:
-                    lead = int(voiced[0])
-                    trail = n - 1 - int(voiced[-1])
-                    kept = n - lead - trail
-                    allsil = 0
-                a = acc.get(src, [0, 0, 0, 0, 0])
-                a[0] += n
-                a[1] += lead
-                a[2] += trail
-                a[3] += kept
-                a[4] += allsil
-                acc[src] = a
-            yield pd.DataFrame(
-                {
-                    "source": list(acc),
-                    "n_samples": [v[0] for v in acc.values()],
-                    "n_lead": [v[1] for v in acc.values()],
-                    "n_trail": [v[2] for v in acc.values()],
-                    "n_kept": [v[3] for v in acc.values()],
-                    "n_all_silent": [v[4] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def trim(text):
+        s = rendered_samples(text)
+        n = len(s)
+        voiced = np.nonzero(np.abs(s) >= _SILENCE_TH)[0]
+        if len(voiced) == 0:
+            return [(n, n, 0, 0, 1)]
+        lead, trail = int(voiced[0]), n - 1 - int(voiced[-1])
+        return [(n, lead, trail, n - lead - trail, 0)]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
-    return partial.groupBy("source").agg(
-        F.sum("n_samples").cast("long").alias("n_samples"),
-        F.sum("n_lead").cast("long").alias("n_lead"),
-        F.sum("n_trail").cast("long").alias("n_trail"),
-        F.sum("n_kept").cast("long").alias("n_kept"),
-        F.sum("n_all_silent").cast("long").alias("n_all_silent"),
+    cols = ("n_samples", "n_lead", "n_trail", "n_kept", "n_all_silent")
+    schema = "source string, " + ", ".join(f"{c} long" for c in cols)
+    return doc_rows(docs, "source", trim, schema).groupBy("source").agg(
+        *(F.sum(c).cast("long").alias(c) for c in cols)
     )
 
 

@@ -23,7 +23,7 @@ Markov paths, Simpson's-paradox rate audit, per-nation Lorenz deciles:
   cents and cumulative share in ppm (integer division).  The curve the
   Gini of ``agg_gini_concentration`` integrates.
 
-Scale notes: edge energy is one ``mapInPandas`` pass with per-batch
+Scale notes: edge energy is one ``doc_rows`` pass with map-side
 partial sums (6-row output, no pixel shuffle); k-core is equi-joins +
 groupBy on the distinct pair table — each pass O(|E|), the three pass
 stats are 1-row scalar aggregates (allowlisted class); Markov² joins a
@@ -34,10 +34,17 @@ agg_gini_concentration layout — never a global sort).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    gray,
+    rendered_image,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.operators.pins import pin
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
@@ -47,53 +54,17 @@ from historic_score_etl_pipeline_spark.sources.catalog import load_table
 def multimodal_image_edge_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: image count and exact integer Σ|horizontal diff| +
     Σ|vertical diff| of the decoded grayscale (gray = (R+G+B) div 3)."""
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        decode_image,
-        render_text_bmp,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("n_images", LongType()),
-            StructField("h_energy", LongType()),
-            StructField("v_energy", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                img = decode_image(render_text_bmp(t or ""))
-                gray = img.astype(np.int64).sum(axis=2) // 3
-                he = int(np.abs(np.diff(gray, axis=1)).sum())
-                ve = int(np.abs(np.diff(gray, axis=0)).sum())
-                n, h, v = acc.get(src, (0, 0, 0))
-                acc[src] = (n + 1, h + he, v + ve)
-            yield pd.DataFrame(
-                {
-                    "source": list(acc),
-                    "n_images": [v[0] for v in acc.values()],
-                    "h_energy": [v[1] for v in acc.values()],
-                    "v_energy": [v[2] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def energy(text):
+        g = gray(rendered_image(text))
+        h = int(np.abs(np.diff(g, axis=1)).sum())
+        return [(1, h, int(np.abs(np.diff(g, axis=0)).sum()))]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
+    schema = "source string, n_images long, h_energy long, v_energy long"
     return (
-        partial.groupBy("source")
+        doc_rows(docs, "source", energy, schema)
+        .groupBy("source")
         .agg(
             F.sum("n_images").cast("long").alias("n_images"),
             F.sum("h_energy").cast("long").alias("h_energy"),

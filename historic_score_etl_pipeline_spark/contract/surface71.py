@@ -27,7 +27,7 @@ map HOFs, correlated scalar subqueries, longest-increasing-run UDAF:
   the classic gaps-and-islands window replay — a REAL hash oracle for
   the J3 grouped-UDAF path.
 
-Scale notes: audio peaks are one ``mapInPandas`` pass with per-clip
+Scale notes: audio peaks are one ``doc_rows`` pass with per-clip
 reduction (|sources|-row output); the chunker is linear in words with
 stride-bounded fan-out (≤ 2× token duplication, the documented overlap
 cost); map HOFs run JVM-side on pre-aggregated |user×type| rows; the
@@ -38,10 +38,16 @@ per-group state is one (prev, run, best) triple.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    rendered_samples,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- audio peak count -------------------------------------------------------------------
@@ -51,59 +57,20 @@ def multimodal_audio_peak_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: clips, total samples, strict local maxima
     (s[j-1] < s[j] > s[j+1]) and integer peak density in ppm of the
     interior (n-2 per clip)."""
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from historic_score_etl_pipeline_spark.operators.codecs import decode_wav
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        render_text_wav,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("n_clips", LongType()),
-            StructField("n_samples", LongType()),
-            StructField("n_peaks", LongType()),
-            StructField("n_interior", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                samples, _sr = decode_wav(render_text_wav(t or ""))
-                s = samples.reshape(-1).astype(np.int64)
-                n = len(s)
-                pk = (
-                    int(((s[1:-1] > s[:-2]) & (s[1:-1] > s[2:])).sum())
-                    if n > 2
-                    else 0
-                )
-                c, ns, p, it_ = acc.get(src, (0, 0, 0, 0))
-                acc[src] = (c + 1, ns + n, p + pk, it_ + max(n - 2, 0))
-            yield pd.DataFrame(
-                {
-                    "source": list(acc),
-                    "n_clips": [v[0] for v in acc.values()],
-                    "n_samples": [v[1] for v in acc.values()],
-                    "n_peaks": [v[2] for v in acc.values()],
-                    "n_interior": [v[3] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def peaks(text):
+        s = rendered_samples(text)
+        n = len(s)
+        pk = int(((s[1:-1] > s[:-2]) & (s[1:-1] > s[2:])).sum()) if n > 2 else 0
+        return [(1, n, pk, max(n - 2, 0))]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
+    schema = (
+        "source string, n_clips long, n_samples long, n_peaks long, n_interior long"
+    )
     return (
-        partial.groupBy("source")
+        doc_rows(docs, "source", peaks, schema)
+        .groupBy("source")
         .agg(
             F.sum("n_clips").cast("long").alias("n_clips"),
             F.sum("n_samples").cast("long").alias("n_samples"),

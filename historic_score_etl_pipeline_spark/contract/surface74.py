@@ -29,15 +29,22 @@ window-filled neighbors — O(|type×day|) aggregate rows; variables and
 WAPE are plain grouped plans; the clustering triple-join runs on a
 DOCUMENTED bounded subgraph (the contract demonstrates attribution —
 operators/graph.py owns the O(m^1.5) full-graph path); symmetry is one
-mapInPandas pass, |sources|-row output.
+``doc_rows`` pass, |sources|-row output.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    gray,
+    rendered_image,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.operators.pins import pin
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
@@ -371,55 +378,17 @@ FROM scored WHERE f IS NOT NULL GROUP BY event_type
 def multimodal_image_symmetry_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: Σ|gray[r,c] − gray[r,w−1−c]| over the left half of
     each decoded BMP — 0 means perfectly mirror-symmetric."""
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        decode_image,
-        render_text_bmp,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("n_images", LongType()),
-            StructField("asym_sum", LongType()),
-            StructField("n_pairs", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                img = decode_image(render_text_bmp(t or ""))
-                gray = img.astype(np.int64).sum(axis=2) // 3
-                h, w = gray.shape
-                half = w // 2
-                left = gray[:, :half]
-                right = gray[:, w - half :][:, ::-1]
-                s = int(np.abs(left - right).sum())
-                n, a, p = acc.get(src, (0, 0, 0))
-                acc[src] = (n + 1, a + s, p + h * half)
-            yield pd.DataFrame(
-                {
-                    "source": list(acc),
-                    "n_images": [v[0] for v in acc.values()],
-                    "asym_sum": [v[1] for v in acc.values()],
-                    "n_pairs": [v[2] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def asymmetry(text):
+        g = gray(rendered_image(text))
+        h, w = g.shape
+        half = w // 2
+        mirrored = g[:, w - half :][:, ::-1]
+        return [(1, int(np.abs(g[:, :half] - mirrored).sum()), h * half)]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
-    return partial.groupBy("source").agg(
+    schema = "source string, n_images long, asym_sum long, n_pairs long"
+    return doc_rows(docs, "source", asymmetry, schema).groupBy("source").agg(
         F.sum("n_images").cast("long").alias("n_images"),
         F.sum("asym_sum").cast("long").alias("asym_sum"),
         F.sum("n_pairs").cast("long").alias("n_pairs"),

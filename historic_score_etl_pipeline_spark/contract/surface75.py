@@ -51,14 +51,12 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in DuckDB (list_sum skips the element, ranks FIRST for its exact-
     # duplicate probe) — caught by the r10 adversarial NULL-element row
     from historic_score_etl_pipeline_spark.operators.similarity import (
+        micro_units,
         valid_vectors,
     )
 
     emb = valid_vectors(load_table(spark, sf_dir, "embeddings"))
-    q = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
+    q = micro_units("embedding")
     bucket = (
         F.when(F.element_at("q", 1) > 0, 1).otherwise(0)
         + F.when(F.element_at("q", 2) > 0, 2).otherwise(0)

@@ -35,10 +35,16 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    rendered_samples,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- packed-binary record ingest ----------------------------------------------------------
@@ -302,57 +308,19 @@ def multimodal_audio_downsample_2x(spark: SparkSession, sf_dir: str) -> DataFram
     """Decimate-by-2 pairwise fold over real WAV decode: per source the
     output length, Σ|s₂ⱼ + s₂ⱼ₊₁| and max |pair sum| — division-free so
     both engines agree on negatives."""
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from historic_score_etl_pipeline_spark.operators.codecs import decode_wav
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        render_text_wav,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("n_clips", LongType()),
-            StructField("n_out", LongType()),
-            StructField("sum_abs_pair", LongType()),
-            StructField("max_abs_pair", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                samples, _sr = decode_wav(render_text_wav(t or ""))
-                s = samples.reshape(-1).astype(np.int64)
-                m = (len(s) // 2) * 2
-                pair = s[:m:2] + s[1:m:2]
-                n_out = len(pair)
-                sa = int(np.abs(pair).sum()) if n_out else 0
-                mx = int(np.abs(pair).max()) if n_out else 0
-                c, no, su, mm = acc.get(src, (0, 0, 0, 0))
-                acc[src] = (c + 1, no + n_out, su + sa, max(mm, mx))
-            yield pd.DataFrame(
-                {
-                    "source": list(acc),
-                    "n_clips": [v[0] for v in acc.values()],
-                    "n_out": [v[1] for v in acc.values()],
-                    "sum_abs_pair": [v[2] for v in acc.values()],
-                    "max_abs_pair": [v[3] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def pairs(text):
+        s = rendered_samples(text)
+        m = (len(s) // 2) * 2
+        pair = np.abs(s[:m:2] + s[1:m:2])
+        return [(1, len(pair), int(pair.sum()), int(pair.max()) if len(pair) else 0)]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
-    return partial.groupBy("source").agg(
+    schema = (
+        "source string, n_clips long, n_out long, sum_abs_pair long, "
+        "max_abs_pair long"
+    )
+    return doc_rows(docs, "source", pairs, schema).groupBy("source").agg(
         F.sum("n_clips").cast("long").alias("n_clips"),
         F.sum("n_out").cast("long").alias("n_out"),
         F.sum("sum_abs_pair").cast("long").alias("sum_abs_pair"),

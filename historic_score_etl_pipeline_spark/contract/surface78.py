@@ -37,6 +37,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- underwater duration --------------------------------------------------------------------
@@ -268,52 +272,20 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-byte frames over the binary payload (the multimodal_frames
     chunk model); per source: frames, cuts (|Δ byte-sum| > 160) and the
     max jump."""
-    from collections.abc import Iterator
 
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("n_clips", LongType()),
-            StructField("n_frames", LongType()),
-            StructField("n_cuts", LongType()),
-            StructField("max_jump", LongType()),
+    def cuts(text):
+        raw = text.encode("utf-8")
+        sums = [
+            sum(raw[i : i + _FRAME_BYTES])
+            for i in range(0, len(raw), _FRAME_BYTES)
         ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                raw = (t or "").encode("utf-8")
-                sums = [
-                    sum(raw[i : i + _FRAME_BYTES])
-                    for i in range(0, len(raw), _FRAME_BYTES)
-                ]
-                jumps = [abs(b - a) for a, b in zip(sums, sums[1:])]
-                cuts = sum(1 for j in jumps if j > _CUT_THRESH)
-                mx = max(jumps) if jumps else 0
-                c, nf, nc, mj = acc.get(src, (0, 0, 0, 0))
-                acc[src] = (c + 1, nf + len(sums), nc + cuts, max(mj, mx))
-            yield pd.DataFrame(
-                {
-                    "source": list(acc),
-                    "n_clips": [v[0] for v in acc.values()],
-                    "n_frames": [v[1] for v in acc.values()],
-                    "n_cuts": [v[2] for v in acc.values()],
-                    "max_jump": [v[3] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+        jumps = [abs(b - a) for a, b in zip(sums, sums[1:])]
+        n_cuts = sum(1 for j in jumps if j > _CUT_THRESH)
+        return [(1, len(sums), n_cuts, max(jumps, default=0))]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
-    return partial.groupBy("source").agg(
+    schema = "source string, n_clips long, n_frames long, n_cuts long, max_jump long"
+    return doc_rows(docs, "source", cuts, schema).groupBy("source").agg(
         F.sum("n_clips").cast("long").alias("n_clips"),
         F.sum("n_frames").cast("long").alias("n_frames"),
         F.sum("n_cuts").cast("long").alias("n_cuts"),

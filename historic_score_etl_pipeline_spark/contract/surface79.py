@@ -39,7 +39,10 @@ from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
-from historic_score_etl_pipeline_spark.operators.similarity import valid_vectors
+from historic_score_etl_pipeline_spark.operators.similarity import (
+    micro_units,
+    valid_vectors,
+)
 
 # --- two-centroid split ---------------------------------------------------------------------
 
@@ -49,10 +52,7 @@ def embed_two_centroid_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     1) by exact integer squared distance (tie → side 0); per side count
     + inertia."""
     emb = valid_vectors(load_table(spark, sf_dir, "embeddings"))
-    q = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
+    q = micro_units("embedding")
     vecs = emb.select(F.col("vec_id").cast("long").alias("vec_id"),
                       q.alias("q"))
     cents = (

@@ -26,7 +26,7 @@ Scale notes: the streaming run is bounded-state (watermark + tumbling
 windows; AvailableNow processes files incrementally); the array scan
 keeps per-order state in one array cell (orders capped at key < 2000
 for the demo; the window twin is the unbounded-scale path); histogram
-equalization is one mapInPandas pass; threshold crossing is one
+equalization is one ``doc_rows`` pass; threshold crossing is one
 user-partitioned running window; the rollup expands |groups|+1 rows.
 """
 
@@ -35,10 +35,17 @@ from __future__ import annotations
 import os
 import tempfile
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    gray,
+    rendered_image,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- real streaming tumbling top-k --------------------------------------------------------
@@ -183,55 +190,16 @@ def multimodal_image_hist_equalization(
 ) -> DataFrame:
     """Per source: Σ of CDF-equalized pixel intensities (16-bin CDF,
     eq = floor(cdf_count · 255 / n_px)) over real decoded BMPs."""
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        decode_image,
-        render_text_bmp,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("n_images", LongType()),
-            StructField("n_px", LongType()),
-            StructField("sum_eq", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                img = decode_image(render_text_bmp(t or ""))
-                gray = (img.astype(np.int64).sum(axis=2) // 3).ravel()
-                npx = gray.size
-                bins = gray // 16
-                hist = np.bincount(bins, minlength=16)
-                cdf = np.cumsum(hist)
-                eq = (cdf[bins] * 255) // npx
-                n, p, s = acc.get(src, (0, 0, 0))
-                acc[src] = (n + 1, p + int(npx), s + int(eq.sum()))
-            yield pd.DataFrame(
-                {
-                    "source": list(acc),
-                    "n_images": [v[0] for v in acc.values()],
-                    "n_px": [v[1] for v in acc.values()],
-                    "sum_eq": [v[2] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def equalized(text):
+        g = gray(rendered_image(text)).ravel()
+        bins = g // 16
+        cdf = np.cumsum(np.bincount(bins, minlength=16))
+        return [(1, g.size, int(((cdf[bins] * 255) // g.size).sum()))]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
-    return partial.groupBy("source").agg(
+    schema = "source string, n_images long, n_px long, sum_eq long"
+    return doc_rows(docs, "source", equalized, schema).groupBy("source").agg(
         F.sum("n_images").cast("long").alias("n_images"),
         F.sum("n_px").cast("long").alias("n_px"),
         F.sum("sum_eq").cast("long").alias("sum_eq"),

@@ -24,7 +24,7 @@ FILTER-clause aggregates, image projection peaks, weighted rule scores:
 
 Scale notes: apportionment ranks |nations| remainder rows; the nested
 scan is pushdown surface; FILTER aggregates are one pass; projection
-peaks are one mapInPandas pass; rule scores fold per-user booleans
+peaks are one ``doc_rows`` pass; rule scores fold per-user booleans
 then histogram ≤7 buckets.
 """
 
@@ -32,10 +32,17 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    gray,
+    rendered_image,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- Hamilton apportionment ------------------------------------------------------------------
@@ -220,54 +227,20 @@ def multimodal_image_projection_peak(spark: SparkSession, sf_dir: str) -> DataFr
     """Per image the argmax ROW of summed brightness (first-index
     tiebreak); per source the histogram of peak-row indices plus the
     summed peak-column index."""
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        decode_image,
-        render_text_bmp,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("peak_row", LongType()),
-            StructField("n_images", LongType()),
-            StructField("sum_peak_col", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                img = decode_image(render_text_bmp(t or ""))
-                gray = img.astype(np.int64).sum(axis=2) // 3
-                pr = int(np.argmax(gray.sum(axis=1)))
-                pc = int(np.argmax(gray.sum(axis=0)))
-                n, sc = acc.get((src, pr), (0, 0))
-                acc[(src, pr)] = (n + 1, sc + pc)
-            yield pd.DataFrame(
-                {
-                    "source": [k[0] for k in acc],
-                    "peak_row": [k[1] for k in acc],
-                    "n_images": [v[0] for v in acc.values()],
-                    "sum_peak_col": [v[1] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def peak(text):
+        g = gray(rendered_image(text))
+        return [(int(np.argmax(g.sum(axis=1))), 1, int(np.argmax(g.sum(axis=0))))]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
-    return partial.groupBy("source", "peak_row").agg(
-        F.sum("n_images").cast("long").alias("n_images"),
-        F.sum("sum_peak_col").cast("long").alias("sum_peak_col"),
+    schema = "source string, peak_row long, n_images long, sum_peak_col long"
+    return (
+        doc_rows(docs, "source", peak, schema)
+        .groupBy("source", "peak_row")
+        .agg(
+            F.sum("n_images").cast("long").alias("n_images"),
+            F.sum("sum_peak_col").cast("long").alias("sum_peak_col"),
+        )
     )
 
 

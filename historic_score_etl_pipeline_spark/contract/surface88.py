@@ -25,7 +25,7 @@ formula sanitizing, value-band migration, image border contrast:
 Scale notes: the bridge explode is ≤3× fan-out with grouped floor
 shares; INT96 and CSV sanitize are scan/sink surface; band migration
 rides one customer-partitioned lag; border contrast is one
-mapInPandas pass.
+``doc_rows`` pass.
 """
 
 from __future__ import annotations
@@ -36,6 +36,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    gray,
+    rendered_image,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- bridge-table weighted allocation ---------------------------------------------------------
@@ -275,67 +281,19 @@ FROM seq WHERE nb IS NOT NULL GROUP BY 1, 2
 def multimodal_image_border_contrast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: Σ gray and pixel counts for the 1-px border ring vs
     the interior of each decoded BMP — vignette detection terms."""
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        decode_image,
-        render_text_bmp,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("n_images", LongType()),
-            StructField("border_px", LongType()),
-            StructField("border_sum", LongType()),
-            StructField("interior_px", LongType()),
-            StructField("interior_sum", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                img = decode_image(render_text_bmp(t or ""))
-                gray = img.astype(np.int64).sum(axis=2) // 3
-                h, w = gray.shape
-                total = int(gray.sum())
-                inner = gray[1 : h - 1, 1 : w - 1]
-                i_sum = int(inner.sum())
-                i_px = inner.size
-                b_sum = total - i_sum
-                b_px = h * w - i_px
-                n, bp, bs, ip, isum = acc.get(src, (0, 0, 0, 0, 0))
-                acc[src] = (n + 1, bp + b_px, bs + b_sum, ip + i_px,
-                            isum + i_sum)
-            yield pd.DataFrame(
-                {
-                    "source": list(acc),
-                    "n_images": [v[0] for v in acc.values()],
-                    "border_px": [v[1] for v in acc.values()],
-                    "border_sum": [v[2] for v in acc.values()],
-                    "interior_px": [v[3] for v in acc.values()],
-                    "interior_sum": [v[4] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def ring(text):
+        g = gray(rendered_image(text))
+        h, w = g.shape
+        inner = g[1 : h - 1, 1 : w - 1]
+        i_sum = int(inner.sum())
+        return [(1, h * w - inner.size, int(g.sum()) - i_sum, inner.size, i_sum)]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
-    return partial.groupBy("source").agg(
-        F.sum("n_images").cast("long").alias("n_images"),
-        F.sum("border_px").cast("long").alias("border_px"),
-        F.sum("border_sum").cast("long").alias("border_sum"),
-        F.sum("interior_px").cast("long").alias("interior_px"),
-        F.sum("interior_sum").cast("long").alias("interior_sum"),
+    cols = ("n_images", "border_px", "border_sum", "interior_px", "interior_sum")
+    schema = "source string, " + ", ".join(f"{c} long" for c in cols)
+    return doc_rows(docs, "source", ring, schema).groupBy("source").agg(
+        *(F.sum(c).cast("long").alias(c) for c in cols)
     )
 
 

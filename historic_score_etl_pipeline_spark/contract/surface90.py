@@ -29,15 +29,21 @@ Scale notes: chunk dedup groups md5(window) — corpus-linear, the
 LSH-free exact tier; fold counts are one scan × 4 fold tags (Expand);
 FX joins a |days|-row broadcast dim; recovery time is three window
 passes per supplier partition; the loudest window rides per-clip
-ordered windows inside one mapInPandas pass (numpy sliding sum).
+ordered windows inside one ``doc_rows`` pass (numpy sliding sum).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.multimodal import (
+    doc_rows,
+    rendered_samples,
+    single_byte_docs,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- chunk-grain dedup ------------------------------------------------------------------------
@@ -297,57 +303,18 @@ def multimodal_audio_loudest_window(spark: SparkSession, sf_dir: str) -> DataFra
     """Per clip: the max trailing-100-sample Σ|s| and its END position
     (earliest tiebreak); per source the count, max window energy and
     sum of peak positions."""
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from historic_score_etl_pipeline_spark.operators.codecs import decode_wav
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        render_text_wav,
-    )
-
-    schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("n_clips", LongType()),
-            StructField("max_energy", LongType()),
-            StructField("sum_peak_pos", LongType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            acc: dict = {}
-            for src, t in zip(pdf["source"], pdf["text"]):
-                samples, _sr = decode_wav(render_text_wav(t or ""))
-                s = np.abs(samples.reshape(-1).astype(np.int64))
-                cs = np.concatenate([[0], np.cumsum(s)])
-                n = len(s)
-                ends = np.arange(1, n + 1)
-                starts = np.maximum(ends - _LOUD_WIN, 0)
-                energies = cs[ends] - cs[starts]
-                best = int(energies.max())
-                pos = int(np.argmax(energies))  # first max → earliest end
-                c, m, sp = acc.get(src, (0, 0, 0))
-                acc[src] = (c + 1, max(m, best), sp + pos)
-            yield pd.DataFrame(
-                {
-                    "source": list(acc),
-                    "n_clips": [v[0] for v in acc.values()],
-                    "max_energy": [v[1] for v in acc.values()],
-                    "sum_peak_pos": [v[2] for v in acc.values()],
-                }
-            )
-
-    from historic_score_etl_pipeline_spark.operators.multimodal import (
-        single_byte_docs,
-    )
+    def loudest(text):
+        s = np.abs(rendered_samples(text))
+        cs = np.concatenate([[0], np.cumsum(s)])
+        ends = np.arange(1, len(s) + 1)
+        energies = cs[ends] - cs[np.maximum(ends - _LOUD_WIN, 0)]
+        # first max → earliest end
+        return [(1, int(energies.max()), int(np.argmax(energies)))]
 
     docs = single_byte_docs(load_table(spark, sf_dir, "documents"))
-    partial = docs.select("source", "text").mapInPandas(batches, schema)
-    return partial.groupBy("source").agg(
+    schema = "source string, n_clips long, max_energy long, sum_peak_pos long"
+    return doc_rows(docs, "source", loudest, schema).groupBy("source").agg(
         F.sum("n_clips").cast("long").alias("n_clips"),
         F.max("max_energy").cast("long").alias("max_energy"),
         F.sum("sum_peak_pos").cast("long").alias("sum_peak_pos"),

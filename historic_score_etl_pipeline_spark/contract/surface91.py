@@ -136,6 +136,7 @@ def embed_lsh_hyperplane_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (similarity.py gate, ADVICE r9) — BEFORE the corpus count,
     so the width law sees the same n on both sides."""
     from historic_score_etl_pipeline_spark.operators.similarity import (
+        micro_units,
         valid_vectors,
     )
 
@@ -159,10 +160,7 @@ def embed_lsh_hyperplane_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hp"),
         )
     )
-    q = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
-    )
+    q = micro_units("embedding")
     # ks[b] = Σ_j [ dot(q, hp[b·w+j]) > 0 ] · 2^j   (exact integer dot;
     # pow(2, j) is exact in double for j ≤ 52, and j < w ≤ 24)
     ks_col = F.transform(

@@ -99,7 +99,7 @@ def connected_components(
     )
     prev_cp = labels  # the checkpointed DF behind the current labels
 
-    for it in range(max_iterations):
+    for _ in range(max_iterations):
         # Each node's candidate label: min over neighbors' current labels.
         neighbor_min = (
             sym.join(labels, sym.b == labels.node)
@@ -120,11 +120,6 @@ def connected_components(
         # that materializes it, so each round runs ONE job (an eager
         # checkpoint would run the round's DAG once to persist and the
         # count would be a second job — 2× the per-round fixed cost)
-        if pins.CAPTURE_ROUND_PLANS:
-            pins.PLAN_SINK.append(
-                f"-- connected_components round {it} --\n"
-                + pins.explain_str(updated)
-            )
         updated = pin(updated)
         n_changed = updated.where(F.col("changed")).count()
         # Round k's count materialized `updated`; round k-1's label blocks
@@ -413,7 +408,7 @@ def pagerank_integer(
     small_v = n <= PR_BROADCAST_MAX_NODES
     od = F.broadcast(outd) if small_v else outd.hint("shuffle_hash")
     ew = pin(e.join(od, "u"))
-    for it in range(iters):
+    for _ in range(iters):
         rk = F.broadcast(ranks) if small_v else ranks.hint("shuffle_hash")
         contrib = (
             ew.join(rk, "u")
@@ -428,15 +423,6 @@ def pagerank_integer(
             F.col("v").alias("u"),
             (F.lit(base) + F.col("acc")).cast("long").alias("r"),
         )
-        if pins.CAPTURE_ROUND_PLANS:
-            # per-round join-strategy evidence (VERDICT r11 #9): the final
-            # DataFrame's visible tree is truncated to one ExistingRDD by
-            # the checkpoints, so the round plans are only observable here,
-            # BEFORE the round's own pin truncates them too
-            pins.PLAN_SINK.append(
-                f"-- pagerank round {it} (rank join + contribution sum) --\n"
-                + pins.explain_str(next_ranks)
-            )
         ranks = pin(next_ranks)
     return ranks.select(
         F.col("u").alias("node"), F.col("r").alias("rank_units")

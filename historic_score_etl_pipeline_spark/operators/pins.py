@@ -41,13 +41,6 @@ from pyspark.sql import DataFrame
 _LOCK = threading.Lock()
 _PINNED: list = []  # py4j handles of live checkpoint RDDs, FIFO
 
-# Debug hook for plan evidence (plans/r12/capture_plans.py): when
-# CAPTURE_ROUND_PLANS is set, iterative operators append each round's
-# pre-execution plan here — the per-round join strategy is otherwise
-# invisible (checkpoints truncate the final DataFrame's visible tree).
-CAPTURE_ROUND_PLANS = False
-PLAN_SINK: list[str] = []
-
 
 def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     """Checkpoint ``df`` (lazy by default) and register it for release.

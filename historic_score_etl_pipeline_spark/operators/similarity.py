@@ -5,10 +5,11 @@ query set against the (huge) corpus — one pass, no shuffle of the corpus,
 `O(corpus × queries × dim)` multiply-adds all inside whole-stage codegen
 (``zip_with`` + ``aggregate``, no Python).
 
-The scale path is IVF-style partition pruning: k-means-ish coarse cells
-(here: modulo-bucketed centroids for determinism), search only the cells
-nearest the query — the REPOSE/EDBT'20 pruning idea (PAPERS.md) without a
-custom index format.
+The scale path is IVF-style partition pruning: coarse cells (in
+``ivf_topk`` the sign pattern of the first log2(n_cells) dimensions, in
+``ivf_topk_kmeans`` centroids trained by ``kmeans_lite``), search only
+the cells nearest the query — the REPOSE/EDBT'20 pruning idea
+(PAPERS.md) without a custom index format.
 """
 
 from __future__ import annotations
@@ -65,6 +66,18 @@ def as_double_array(col: Column | str) -> Column:
     any double-based oracle and avoids float-accumulation drift)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(c, lambda x: x.cast("double"))
+
+
+def micro_unit(x: Column) -> Column:
+    """One float as integer micro-units, rounded half up:
+    ``floor(x·1e6 + 0.5)`` as long — the exact integer form the vector
+    queries sum, compare and hash (oracle twin ``floor(x * 1e6 + 0.5)``)."""
+    return F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long")
+
+
+def micro_units(col: Column | str) -> Column:
+    """:func:`micro_unit` over every element of an array column."""
+    return F.transform(col, micro_unit)
 
 
 def brute_force_topk(

@@ -8,8 +8,9 @@ best possible shape for corpus-wide text featurization.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 # Tiny marker-word lists per language — an n-gram/stopword heuristic in the
 # spirit of langid's feature voting, deliberately simple + deterministic.
@@ -354,5 +355,32 @@ def token_entropy(df, id_col: str, text_col: str):
             F.max("n").cast("long").alias("n_tokens"),
             F.count(F.lit(1)).cast("long").alias("n_types"),
             F.sum("term").cast("long").alias("entropy_unats"),
+        )
+    )
+
+
+def pack_shards(docs: DataFrame, budget: int = 2048) -> DataFrame:
+    """Pack documents into fixed-token-budget training shards per language.
+
+    Docs are ordered deterministically (doc_id) inside each language,
+    token counts cumsum'd, and a doc lands in shard
+    ``floor(exclusive_cumsum / budget)`` — the standard concat-then-chunk
+    pretraining layout.  One hash shuffle on ``lang``; at 100 TB the
+    window state is one running long per partition."""
+    w = (
+        Window.partitionBy("lang")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        docs.withColumn("n_tokens", F.size(tokens("text")))
+        .withColumn("cum_tokens", F.sum("n_tokens").over(w))
+        .select(
+            "doc_id",
+            "lang",
+            "n_tokens",
+            F.floor(
+                (F.col("cum_tokens") - F.col("n_tokens")) / F.lit(budget)
+            ).alias("shard_id"),
         )
     )

@@ -11,11 +11,6 @@ additionally FORCED through the noop sink and the post-AQE executed plan
 runtime re-optimization (AQE coalescing, broadcast demotion) kept the
 claimed shape.  Uses the same staged landing zone and split sizing as
 bench.py so scan nodes match what the bench times.
-
-For ITERATIVE operators (pagerank / connected components) whose final plan
-is truncated to a 2-node ExistingRDD scan by the per-round checkpoints
-(VERDICT r11 "what's wrong" #4), the per-round join plans are captured via
-the operators' ``plan_sink`` debug hook and appended to the same file.
 """
 
 from __future__ import annotations
@@ -62,20 +57,13 @@ def main() -> None:
     import io
     from contextlib import redirect_stdout
 
-    from historic_score_etl_pipeline_spark.operators import pins
-
-    pins.CAPTURE_ROUND_PLANS = True
     for name, fn in targets:
         try:
-            pins.PLAN_SINK.clear()
             df = fn()
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
             plan = buf.getvalue()
-            if pins.PLAN_SINK:
-                plan += "\n\n=== per-round plans (iterative operator) ===\n"
-                plan += "\n".join(pins.PLAN_SINK)
             if executed:
                 df.write.format("noop").mode("overwrite").save()
                 plan += "\n\n=== executed plan (post-AQE) ===\n"

@@ -170,3 +170,88 @@ def test_png_roundtrip_fused_equals_composed(spark, sf_oracle):
     # count the detail headers
     assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 0
+
+
+def test_doc_rows_carries_key_fans_out_and_renders_empty_text(spark):
+    """One kernel row per tuple ``fn`` returns, each led by its document's
+    key: a doc may yield none or several, and NULL/empty text still
+    renders (as "")."""
+    from historic_score_etl_pipeline_spark.operators.multimodal import (
+        doc_rows,
+        rendered_image,
+        rendered_samples,
+    )
+
+    docs = spark.createDataFrame(
+        [(10, "a", "ab"), (20, "b", ""), (30, "b", None), (40, "a", "x")],
+        "doc_id int, src string, text string",
+    )
+
+    def fn(text):
+        width = rendered_image(text).shape[1]  # nb % 24 + 8
+        n = {0: 1, 1: 0}.get(len(text), 2)  # empty → 1 row, 1 byte → none
+        return [(width, j) for j in range(n)]
+
+    rows = doc_rows(docs, "doc_id", fn, "media_id long, width long, j long")
+    assert sorted(map(tuple, rows.collect())) == [
+        (10, 10, 0), (10, 10, 1), (20, 8, 0), (30, 8, 0),
+    ]
+    n_samples = doc_rows(
+        docs, "src", lambda t: [(len(rendered_samples(t)),)], "src string, n long"
+    )
+    # n_samples = nb % 441 + 100, so NULL and "" both render 100 samples
+    assert sorted(map(tuple, n_samples.collect())) == [
+        ("a", 101), ("a", 102), ("b", 100), ("b", 100),
+    ]
+
+
+def test_pixel_histogram_is_one_map_in_arrow(spark, sf_smoke):
+    """The per-source histogram is the doc_rows kernel plus a Spark
+    aggregate: one MapInArrow, no MapInPandas."""
+    import re
+
+    from historic_score_etl_pipeline_spark.contract.surface61 import (
+        multimodal_pixel_histogram,
+    )
+    from historic_score_etl_pipeline_spark.operators.pins import explain_str
+
+    plan = explain_str(multimodal_pixel_histogram(spark, sf_smoke), "formatted")
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 0
+
+
+def test_contract_modules_do_not_decode_media():
+    """Render→decode lives in operators/multimodal only: no contract
+    module names decode_image/decode_wav, and no contract function runs
+    mapInPandas over rendered media.  (surface19's BMP file stager may
+    still call render_text_bmp: it writes files, it decodes nothing.)"""
+    import ast
+    from pathlib import Path
+
+    import historic_score_etl_pipeline_spark.contract as contract
+
+    decoders = {"decode_image", "decode_wav"}
+    renderers = {
+        "render_text_bmp", "render_text_wav", "rendered_image", "rendered_samples",
+    }
+
+    def names(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+            elif isinstance(n, ast.alias):
+                yield n.name
+
+    offenders = []
+    for path in sorted(Path(contract.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        if decoders & set(names(tree)):
+            offenders.append(f"{path.name}: decodes media")
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef):
+                used = set(names(fn))
+                if "mapInPandas" in used and renderers & used:
+                    offenders.append(f"{path.name}:{fn.name}: mapInPandas media")
+    assert not offenders, offenders
