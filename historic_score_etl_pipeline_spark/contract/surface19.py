@@ -247,20 +247,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-4 fix: the earlier naive id-ordered 3-way self-join was
     O(Σdeg²) and timed out the sf0.1 cross-scale sweep)."""
     from historic_score_etl_pipeline_spark.operators.graph import (
+        co_order_edges,
         triangle_count,
     )
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-    )
+    edges = co_order_edges(load_table(spark, sf_dir, "lineitem"))
     return triangle_count(edges, "u", "v")
 
 

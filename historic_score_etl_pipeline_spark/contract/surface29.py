@@ -36,6 +36,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.sketches import (
+    _HLL_EST_NUM,
+    _HLL_M,
+    _HLL_RHO_CAP,
+    hll_estimate,
+    hll_ranks,
+    hll_registers,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- zero-exchange bucketed join ----------------------------------------------
@@ -97,72 +105,19 @@ GROUP BY c.c_mktsegment
 
 # --- portable HyperLogLog -----------------------------------------------------
 
-_HLL_M = 256  # registers (p = 8)
-_HLL_ALPHA_M2 = 47072.71267120224  # 0.7213/(1+1.079/256) * 256²
-_HLL_RHO_CAP = 35
-_HLL_POW = float(1 << _HLL_RHO_CAP)  # 2^35
-# numerator folded to ONE double literal (a decimal-literal product
-# overflows DuckDB's DECIMAL inference; and one literal = one rounding)
-_HLL_EST_NUM = _HLL_ALPHA_M2 * _HLL_POW
-
 
 def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct users per event type via a from-scratch HLL whose
-    registers are md5-derived and whose harmonic sum is EXACT integer
-    arithmetic — cross-engine bit-equal, unlike engine-native HLL.
+    """Distinct users per event type via the portable HLL
+    (operators/sketches.py): md5-derived registers and an EXACT integer
+    harmonic sum — cross-engine bit-equal, unlike engine-native HLL.
 
     Scale shape: (type, register) partial max — map-side combinable,
     |types|×256 rows of state — then one 256-row fold per type.  The
     register table IS the mergeable sketch: union = max per register."""
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    h = F.md5(F.col("user_id").cast("string"))
-    reg = F.conv(F.substring(h, 1, 2), 16, 10).cast("long")
-    suffix = F.conv(F.substring(h, 3, 15), 16, 10).cast("long")
-    # rank = leading zeros of the 60-bit suffix + 1, via base-2 STRING
-    # length (conv drops leading zeros) — no float log2 to diverge
-    rho = F.when(suffix == 0, F.lit(61)).otherwise(
-        F.lit(61) - F.length(F.conv(suffix.cast("string"), 10, 2))
-    )
-    regs = (
-        ev.select("event_type", reg.alias("reg"), rho.alias("rho"))
-        .groupBy("event_type", "reg")
-        .agg(F.max("rho").alias("max_rho"))
-    )
-    # shiftleft's bit count must be a column here → spell it in SQL
-    pow_term = F.expr(
-        f"shiftleft(CAST(1 AS BIGINT), "
-        f"{_HLL_RHO_CAP} - least(max_rho, {_HLL_RHO_CAP}))"
-    )
-    per_type = regs.groupBy("event_type").agg(
-        F.sum(pow_term).alias("s_hit"),
-        F.count(F.lit(1)).alias("m_hit"),
-    )
-    # empty registers contribute 2^35 each to the harmonic denominator
-    s_total = F.col("s_hit") + (F.lit(_HLL_M) - F.col("m_hit")) * F.lit(
-        1 << _HLL_RHO_CAP
-    )
-    raw = F.floor(
-        F.lit(_HLL_EST_NUM) / s_total.cast("double") + F.lit(0.5)
-    ).cast("long")
-    # small-range (LinearCounting) correction, as standard HLL: when
-    # empty registers remain and the raw estimate is under 2.5m, use
-    # m·ln(m/V).  V is an INTEGER so lc takes one of 256 values; the
-    # floor(x+0.5) at unit precision makes a 1-ulp cross-engine ln
-    # divergence harmless (the repo's micro-nat fixpoint convention).
-    v_zero = F.lit(_HLL_M) - F.col("m_hit")
-    lc = F.floor(
-        F.lit(float(_HLL_M))
-        * F.log(F.lit(float(_HLL_M)) / v_zero.cast("double"))
-        + F.lit(0.5)
-    ).cast("long")
-    est = F.when(
-        (v_zero > 0) & (raw <= F.lit(int(2.5 * _HLL_M))), lc
-    ).otherwise(raw)
-    return per_type.select(
-        "event_type",
-        F.col("m_hit").cast("long").alias("regs_hit"),
-        s_total.cast("long").alias("harmonic_fp"),
-        est.alias("est_users"),
+    regs = hll_registers(hll_ranks(ev, ["event_type"], "user_id"), ["event_type"])
+    return hll_estimate(regs, ["event_type"]).select(
+        "event_type", "regs_hit", "harmonic_fp", F.col("est").alias("est_users")
     )
 
 

@@ -37,6 +37,13 @@ from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
 from historic_score_etl_pipeline_spark.operators.pins import pin
+from historic_score_etl_pipeline_spark.operators.sketches import (
+    _KMV_K,
+    _KMV_SPACE,
+    kmv_estimate,
+    kmv_hashes,
+    kmv_kth,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- CUSUM as two windows -----------------------------------------------------
@@ -360,42 +367,21 @@ JOIN sig sb ON sb.doc_id = p.id_b
 
 # --- K-Minimum-Values distinct sketch -----------------------------------------
 
-_KMV_K = 64
-_KMV_SPACE = float(1 << 60)
-
-
 def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV cardinality estimate per event type: k-th smallest of the
     distinct 60-bit md5 values, est = (k−1)·2⁶⁰ / h₍ₖ₎ (exact count
     below k).  Distinct-hash dedup → per-group rank — one shuffle
     each, k rows of state per group retained."""
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    hashes = ev.select("event_type", h.alias("h")).distinct()
-    w = Window.partitionBy("event_type").orderBy("h")
-    ranked = hashes.select(
-        "event_type", "h", F.row_number().over(w).alias("rk")
-    )
-    per_type = ranked.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.max(F.when(F.col("rk") == _KMV_K, F.col("h"))).alias("h_k"),
-    )
-    est = F.when(
-        F.col("n_distinct") < _KMV_K, F.col("n_distinct")
-    ).otherwise(
-        F.floor(
-            F.lit(float(_KMV_K - 1))
-            * F.lit(_KMV_SPACE)
-            / F.col("h_k").cast("double")
-            + F.lit(0.5)
-        )
-    ).cast("long")
+    per_type = kmv_kth(
+        kmv_hashes(ev, ["event_type"], "user_id"), ["event_type"]
+    ).withColumnRenamed("n", "n_distinct")
     return per_type.select(
         "event_type",
         F.col("n_distinct").cast("long").alias("n_distinct"),
-        est.alias("est_kmv"),
+        kmv_estimate(F.col("n_distinct"), F.col("h_k"), rounded=True)
+        .cast("long")
+        .alias("est_kmv"),
     )
 
 

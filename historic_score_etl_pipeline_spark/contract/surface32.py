@@ -29,6 +29,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.sketches import (
+    _KMV_K,
+    _KMV_SPACE,
+    kmv_estimate,
+    kmv_hashes,
+    kmv_kth,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- max drawdown -------------------------------------------------------------
@@ -81,18 +88,6 @@ FROM dd GROUP BY user_id
 
 # --- KMV intersection algebra -------------------------------------------------
 
-_KMV_K = 64
-_KMV_SPACE = float(1 << 60)
-
-
-def _kmv_est(n: F.Column, h_k: F.Column) -> F.Column:
-    return (
-        F.when(n < _KMV_K, n.cast("double"))
-        .otherwise(
-            F.lit(float(_KMV_K - 1)) * F.lit(_KMV_SPACE) / h_k.cast("double")
-        )
-    )
-
 
 def agg_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """|A∩B| per event-type pair by KMV inclusion–exclusion.  The three
@@ -101,19 +96,8 @@ def agg_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     two hash sets — exactly how a warehouse merges persisted sketches
     without touching raw data again."""
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    hashes = ev.select("event_type", h.alias("h")).distinct()
-    wr = Window.partitionBy("event_type").orderBy("h")
-    per = (
-        hashes.select("event_type", "h", F.row_number().over(wr).alias("rk"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.when(F.col("rk") == _KMV_K, F.col("h"))).alias("h_k"),
-        )
-    )
+    hashes = kmv_hashes(ev, ["event_type"], "user_id")
+    per = kmv_kth(hashes, ["event_type"])
     a = per.select(
         F.col("event_type").alias("type_a"),
         F.col("n").alias("na"),
@@ -138,21 +122,13 @@ def agg_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    wu = Window.partitionBy("type_a", "type_b").orderBy("h")
-    uni = (
-        pair_h.select(
-            "type_a", "type_b", "h", F.row_number().over(wu).alias("rk")
-        )
-        .groupBy("type_a", "type_b")
-        .agg(
-            F.count(F.lit(1)).alias("nu"),
-            F.max(F.when(F.col("rk") == _KMV_K, F.col("h"))).alias("hku"),
-        )
+    uni = kmv_kth(pair_h, ["type_a", "type_b"]).select(
+        "type_a", "type_b", F.col("n").alias("nu"), F.col("h_k").alias("hku")
     )
     est_inter = (
-        _kmv_est(F.col("na"), F.col("hka"))
-        + _kmv_est(F.col("nb"), F.col("hkb"))
-        - _kmv_est(F.col("nu"), F.col("hku"))
+        kmv_estimate(F.col("na"), F.col("hka"))
+        + kmv_estimate(F.col("nb"), F.col("hkb"))
+        - kmv_estimate(F.col("nu"), F.col("hku"))
     )
     return (
         uni.join(F.broadcast(a), "type_a")

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.graph import co_order_edges
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 from historic_score_etl_pipeline_spark.operators.similarity import (
     micro_unit,
@@ -262,18 +263,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same edge builder as graph_triangle_count).  Bucket =
     bit_length(deg) − 1 via length(bin(deg)) — integer arithmetic, no
     libm log2."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
+    edges = co_order_edges(load_table(spark, sf_dir, "lineitem"))
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))

@@ -2,7 +2,7 @@
 snapping, interval sweep, and dynamic pivot:
 
 * ``agg_hll_intersection`` — |A∩B| by inclusion–exclusion over the
-  repo's PORTABLE HLL (surface29 register scheme: md5 registers,
+  repo's PORTABLE HLL (operators/sketches.py: md5 registers,
   integer harmonic sums): est(A) + est(B) − est(A∪B), where the union
   sketch is the register-wise max — the sketch-algebra rollup story
   (LC-branch V domain already exhaustively ln-boundary-audited).
@@ -33,10 +33,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
-from historic_score_etl_pipeline_spark.contract.surface29 import (
+from historic_score_etl_pipeline_spark.operators.sketches import (
     _HLL_EST_NUM,
     _HLL_M,
     _HLL_RHO_CAP,
+    hll_estimate,
+    hll_ranks,
+    hll_registers,
 )
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
@@ -45,51 +48,27 @@ from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 def agg_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """est(click) + est(purchase) − est(click ∪ purchase) over the
-    portable register scheme (surface29); union = per-register max."""
+    portable register scheme (operators/sketches.py); union =
+    per-register max."""
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
         & F.col("event_type").isin("click", "purchase")
     )
-    h = F.md5(F.col("user_id").cast("string"))
-    reg = F.conv(F.substring(h, 1, 2), 16, 10).cast("long")
-    suffix = F.conv(F.substring(h, 3, 15), 16, 10).cast("long")
-    rho = F.when(suffix == 0, F.lit(61)).otherwise(
-        F.lit(61) - F.length(F.conv(suffix.cast("string"), 10, 2))
-    )
-    base = ev.select(
-        F.when(F.col("event_type") == "click", "a").otherwise("b").alias("tag"),
-        reg.alias("reg"),
-        rho.alias("rho"),
+    ranks = hll_ranks(
+        ev.select(
+            F.when(F.col("event_type") == "click", "a").otherwise("b").alias("tag"),
+            "user_id",
+        ),
+        ["tag"],
+        "user_id",
     )
     # three sketches from one pass: a, b, and u = a ∪ b (explode each
-    # row into its own tag plus 'u', then per-(tag, reg) max)
-    tagged = base.select(
+    # ranked row into its own tag plus 'u', then the register max)
+    tagged = ranks.select(
         F.explode(F.array(F.col("tag"), F.lit("u"))).alias("tag"), "reg", "rho"
     )
-    regs = tagged.groupBy("tag", "reg").agg(F.max("rho").alias("max_rho"))
-    pow_term = F.expr(
-        f"shiftleft(CAST(1 AS BIGINT), "
-        f"{_HLL_RHO_CAP} - least(max_rho, {_HLL_RHO_CAP}))"
-    )
-    per_tag = regs.groupBy("tag").agg(
-        F.sum(pow_term).alias("s_hit"), F.count(F.lit(1)).alias("m_hit")
-    )
-    s_total = F.col("s_hit") + (F.lit(_HLL_M) - F.col("m_hit")) * F.lit(
-        1 << _HLL_RHO_CAP
-    )
-    raw = F.floor(
-        F.lit(_HLL_EST_NUM) / s_total.cast("double") + F.lit(0.5)
-    ).cast("long")
-    v_zero = F.lit(_HLL_M) - F.col("m_hit")
-    lc = F.floor(
-        F.lit(float(_HLL_M))
-        * F.log(F.lit(float(_HLL_M)) / v_zero.cast("double"))
-        + F.lit(0.5)
-    ).cast("long")
-    est = F.when(
-        (v_zero > 0) & (raw <= F.lit(int(2.5 * _HLL_M))), lc
-    ).otherwise(raw)
-    ests = per_tag.select("tag", est.alias("e"))
+    regs = hll_registers(tagged, ["tag"])
+    ests = hll_estimate(regs, ["tag"]).select("tag", F.col("est").alias("e"))
     one = ests.agg(
         F.sum(F.when(F.col("tag") == "a", F.col("e"))).alias("est_click"),
         F.sum(F.when(F.col("tag") == "b", F.col("e"))).alias("est_purchase"),

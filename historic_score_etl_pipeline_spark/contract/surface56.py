@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.graph import co_order_edges
 from historic_score_etl_pipeline_spark.operators.multimodal import (
     doc_rows,
     rendered_samples,
@@ -48,20 +49,9 @@ from historic_score_etl_pipeline_spark.sources.catalog import load_table
 _BFS_SEEDS = 3
 
 
-def _co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    return (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-
-
 def graph_bfs_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact hop-1 / hop-2 tier sizes from the top-3-degree seeds."""
-    edges = _co_order_edges(spark, sf_dir)
+    edges = co_order_edges(load_table(spark, sf_dir, "lineitem"))
     sym = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

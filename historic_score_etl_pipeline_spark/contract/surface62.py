@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
-from historic_score_etl_pipeline_spark.contract.surface29 import (
+from historic_score_etl_pipeline_spark.operators.graph import co_order_edges
+from historic_score_etl_pipeline_spark.operators.sketches import (
     _HLL_EST_NUM,
     _HLL_M,
     _HLL_RHO_CAP,
@@ -302,14 +303,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson r of endpoint degrees over DIRECTED edge copies (both
     orientations — the standard undirected treatment): exact integer
     sums, one identical double expression for r (×1e6)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
+    edges = co_order_edges(load_table(spark, sf_dir, "lineitem"))
     sym = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

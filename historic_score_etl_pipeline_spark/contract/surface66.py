@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
-from historic_score_etl_pipeline_spark.contract.surface56 import _co_order_edges
+from historic_score_etl_pipeline_spark.operators.graph import co_order_edges
 from historic_score_etl_pipeline_spark.operators.multimodal import (
     doc_rows,
     gray,
@@ -195,7 +195,7 @@ def graph_link_predict_common_neighbors(
     by exact common-neighbor count over the part co-order graph (2-hop
     wedge join from the broadcast seed set, existing edges anti-joined
     away)."""
-    edges = _co_order_edges(spark, sf_dir)
+    edges = co_order_edges(load_table(spark, sf_dir, "lineitem"))
     sym = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.graph import co_order_edges
 from historic_score_etl_pipeline_spark.operators.multimodal import (
     doc_rows,
     gray,
@@ -243,16 +244,7 @@ def graph_clustering_coeff_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_partkey") < _CLUST_MAXKEY
     )
-    pairs = (
-        li.alias("a")
-        .join(li.alias("b"), F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").cast("long").alias("u"),
-            F.col("b.l_partkey").cast("long").alias("v"),
-        )
-        .distinct()
-    )
+    pairs = co_order_edges(li)
     pairs = pin(pairs)
     deg = (
         pairs.select(F.col("u").alias("x"))

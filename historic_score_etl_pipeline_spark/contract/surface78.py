@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.operators.graph import co_order_edges
 from historic_score_etl_pipeline_spark.operators.multimodal import (
     doc_rows,
     single_byte_docs,
@@ -46,11 +47,12 @@ from historic_score_etl_pipeline_spark.sources.catalog import load_table
 # --- underwater duration --------------------------------------------------------------------
 
 
-def window_underwater_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per supplier (< 10): longest consecutive run of prices strictly
-    below the running max, plus total underwater rows."""
+def supplier_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-supplier price series (suppliers < 10): ``sk``, the
+    (``l_shipdate``, ``l_orderkey``, ``l_linenumber``) order columns and
+    the extended price in integer cents ``c``."""
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_suppkey") < 10)
-    px = li.select(
+    return li.select(
         F.col("l_suppkey").cast("long").alias("sk"),
         "l_shipdate",
         "l_orderkey",
@@ -59,6 +61,12 @@ def window_underwater_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("c"),
     )
+
+
+def window_underwater_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per supplier (< 10): longest consecutive run of prices strictly
+    below the running max, plus total underwater rows."""
+    px = supplier_cents(spark, sf_dir)
     w = Window.partitionBy("sk").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber"
     )
@@ -221,16 +229,7 @@ def graph_greedy_walk_3steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_partkey") < _WALK_MAXKEY
     )
-    pairs = (
-        li.alias("a")
-        .join(li.alias("b"), F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").cast("long").alias("u"),
-            F.col("b.l_partkey").cast("long").alias("v"),
-        )
-        .distinct()
-    )
+    pairs = co_order_edges(li)
     und = pairs.unionByName(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

@@ -123,9 +123,9 @@ FROM assigned GROUP BY 1
 _ANAGRAM_TOPK = 20
 
 
-def text_anagram_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Words (len ≥ 3) keyed by sorted character multiset; top-20
-    classes by (distinct words, signature)."""
+def vocab_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(w, n)``: every lower-cased ``[^a-z0-9]+``-split document word of
+    length ≥ 3 with its occurrence count."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(
@@ -135,7 +135,13 @@ def text_anagram_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("w")
     )
-    wc = toks.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    return toks.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("n"))
+
+
+def text_anagram_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Words (len ≥ 3) keyed by sorted character multiset; top-20
+    classes by (distinct words, signature)."""
+    wc = vocab_counts(spark, sf_dir)
     sig = F.concat_ws(
         "", F.sort_array(F.filter(F.split("w", ""), lambda c: c != ""))
     )

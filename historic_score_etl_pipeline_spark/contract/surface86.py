@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.contract.surface78 import supplier_cents
+from historic_score_etl_pipeline_spark.contract.surface79 import vocab_counts
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- order/line consistency audit ---------------------------------------------------------------
@@ -120,16 +122,7 @@ FROM j GROUP BY o_orderstatus
 def text_prefix_autocomplete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per 3-char prefix (words len ≥ 3): the top completion by
     (count desc, word), the candidate count and total occurrences."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-                lambda t: F.length(t) >= 3,
-            )
-        ).alias("w")
-    )
-    wc = toks.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    wc = vocab_counts(spark, sf_dir)
     keyed = wc.select(F.substring("w", 1, 3).alias("prefix"), "w", "n")
     rk = Window.partitionBy("prefix").orderBy(F.desc("n"), F.asc("w"))
     return (
@@ -298,16 +291,7 @@ def window_runs_test_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per supplier (< 10): n₊/n₋ around the series MEDIAN (exact lower
     median, ties count as minus) and the observed run count — the
     Wald–Wolfowitz randomness-test ingredients."""
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_suppkey") < 10)
-    px = li.select(
-        F.col("l_suppkey").cast("long").alias("sk"),
-        "l_shipdate",
-        "l_orderkey",
-        "l_linenumber",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c"),
-    )
+    px = supplier_cents(spark, sf_dir)
     wr = Window.partitionBy("sk").orderBy("c", "l_orderkey", "l_linenumber")
     wc = Window.partitionBy("sk")
     med = (

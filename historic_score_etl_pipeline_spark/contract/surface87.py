@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import QuerySpec
+from historic_score_etl_pipeline_spark.contract.surface78 import supplier_cents
+from historic_score_etl_pipeline_spark.contract.surface79 import vocab_counts
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 # --- QUALIFY dialect pair -----------------------------------------------------------------
@@ -146,16 +148,7 @@ def window_best_split_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per supplier (< 10): the split index i (1 ≤ i < n) maximizing
     the fixpointed |mean(prefix) − mean(suffix)| in ppm-cents (exact
     argmax, smallest-index tiebreak)."""
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_suppkey") < 10)
-    px = li.select(
-        F.col("l_suppkey").cast("long").alias("sk"),
-        "l_shipdate",
-        "l_orderkey",
-        "l_linenumber",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c"),
-    )
+    px = supplier_cents(spark, sf_dir)
     w = Window.partitionBy("sk").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber"
     )
@@ -280,16 +273,7 @@ def str_group_medoid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within each 3-char prefix block of the vocabulary: the word
     minimizing the count-weighted Σ Levenshtein distance to its
     blockmates (tiebreak by word) — the canonical representative."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-                lambda t: F.length(t) >= 3,
-            )
-        ).alias("w")
-    )
-    wc = toks.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    wc = vocab_counts(spark, sf_dir)
     keyed = wc.select(F.substring("w", 1, 3).alias("prefix"), "w", "n")
     pairs = (
         keyed.alias("x")

@@ -24,7 +24,6 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from historic_score_etl_pipeline_spark.operators.pins import pin
 from historic_score_etl_pipeline_spark.operators.scale import ensure_parallelism
@@ -517,13 +516,6 @@ def near_dup_jaccard(
         )
         .where(F.col("jaccard") >= threshold)
     )
-
-
-def keep_first_per_key(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
-    """Window keep-first — dedup at scale when payloads are wide (avoids
-    min() over every column): rank within fingerprint, keep rn=1."""
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
 
 
 def substring_span_pairs(

@@ -32,6 +32,21 @@ from historic_score_etl_pipeline_spark.operators import pins
 from historic_score_etl_pipeline_spark.operators.pins import pin
 
 
+def co_order_edges(lineitem: DataFrame) -> DataFrame:
+    """The co-order part graph: one distinct undirected edge ``(u, v)``,
+    ``u < v``, per two parts appearing in the same order — an equi
+    self-join on ``l_orderkey``.  Pass a pre-filtered ``lineitem`` (e.g.
+    ``l_partkey < N``) for a bounded subgraph."""
+    li = lineitem.select("l_orderkey", "l_partkey")
+    a, b = li.alias("a"), li.alias("b")
+    return (
+        a.join(b, "l_orderkey")
+        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
+        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+        .distinct()
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",

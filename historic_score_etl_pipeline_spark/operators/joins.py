@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 
 #: zip_index_join refuses inputs above this size unless overridden — the
@@ -85,6 +85,55 @@ def left_enrich(
     return out
 
 
+def _asof_union_merge(
+    left: DataFrame,
+    right: DataFrame,
+    key: str,
+    left_ts: str,
+    right_ts: str,
+    payload: list[Column],
+    right_tiebreak: str | None,
+) -> tuple[DataFrame, WindowSpec]:
+    """The as-of union-merge frame and its window order, shared by the
+    backward and nearest joins.
+
+    One schema for both sides: ``__k`` key, ``__t`` time, ``__tag`` (0 on
+    right rows, 1 on left rows), ``__p`` the packed ``payload`` struct
+    (NULL on left rows), ``__l_<c>`` per left column (NULL on right rows),
+    ``__tb`` tiebreak.  The payload travels as ONE struct built only on
+    right rows: a per-column last(ignorenulls) would fill a NULL field of
+    the matched row from an OLDER right row, mixing values across right
+    rows — packing keeps the matched row's actual NULLs and guarantees all
+    payload columns come from the same right row.
+
+    The order is (``__t``, ``__tag``, ``__tb``) within ``__k``: right rows
+    sort before left rows at equal t (tag 0 < 1) => inclusive
+    right_ts <= left_ts, and among equal-t right rows the max tiebreak is
+    LAST in ascending order.  Callers add the frame."""
+    left_cols = list(left.columns)
+    rhs = right.select(
+        F.col(key).alias("__k"),
+        F.col(right_ts).alias("__t"),
+        F.lit(0).alias("__tag"),
+        F.struct(*payload).alias("__p"),
+        *[
+            F.lit(None).cast(dict(left.dtypes)[c]).alias(f"__l_{c}")
+            for c in left_cols
+        ],
+        (F.col(right_tiebreak) if right_tiebreak else F.lit(0)).alias("__tb"),
+    )
+    lhs = left.select(
+        F.col(key).alias("__k"),
+        F.col(left_ts).alias("__t"),
+        F.lit(1).alias("__tag"),
+        F.lit(None).cast(rhs.schema["__p"].dataType).alias("__p"),
+        *[F.col(c).alias(f"__l_{c}") for c in left_cols],
+        F.lit(None).cast(rhs.schema["__tb"].dataType).alias("__tb"),
+    )
+    order = Window.partitionBy("__k").orderBy("__t", "__tag", "__tb")
+    return rhs.unionByName(lhs), order
+
+
 def asof_backward_join(
     left: DataFrame,
     right: DataFrame,
@@ -116,44 +165,12 @@ def asof_backward_join(
     LAST in (ts, tiebreak) ascending order wins, i.e. the max tiebreak).
     Output: every ``left`` column + ``payload_cols`` from the right side.
     """
-    # Shared merge schema: key, t, tag, packed payload (null on left rows),
-    # then the left columns (null on right rows).  The payload travels as
-    # ONE struct built only on right rows: a per-column last(ignorenulls)
-    # would fill a NULL field of the matched row from an OLDER right row,
-    # mixing values across right rows — packing keeps the matched row's
-    # actual NULLs and guarantees all payload columns come from the same
-    # right row.
-    left_cols = [c for c in left.columns]
-    rhs = right.select(
-        F.col(key).alias("__k"),
-        F.col(right_ts).alias("__t"),
-        F.lit(0).alias("__tag"),
-        F.struct(*[F.col(c) for c in payload_cols]).alias("__p"),
-        *[
-            F.lit(None).cast(dict(left.dtypes)[c]).alias(f"__l_{c}")
-            for c in left_cols
-        ],
-        (
-            F.col(right_tiebreak) if right_tiebreak else F.lit(0)
-        ).alias("__tb"),
+    left_cols = list(left.columns)
+    merged, order = _asof_union_merge(
+        left, right, key, left_ts, right_ts,
+        [F.col(c) for c in payload_cols], right_tiebreak,
     )
-    lhs = left.select(
-        F.col(key).alias("__k"),
-        F.col(left_ts).alias("__t"),
-        F.lit(1).alias("__tag"),
-        F.lit(None).cast(rhs.schema["__p"].dataType).alias("__p"),
-        *[F.col(c).alias(f"__l_{c}") for c in left_cols],
-        F.lit(None).cast(rhs.schema["__tb"].dataType).alias("__tb"),
-    )
-    merged = rhs.unionByName(lhs)
-    # Right rows sort before left rows at equal t (tag 0 < 1) => inclusive
-    # right_ts <= left_ts; among equal-t right rows the max tiebreak is
-    # LAST in ascending order, so running last() picks it.
-    w = (
-        Window.partitionBy("__k")
-        .orderBy("__t", "__tag", "__tb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     carried = merged.withColumn("__p", F.last("__p", ignorenulls=True).over(w))
     return carried.where(F.col("__tag") == 1).select(
         *[F.col(f"__l_{c}").alias(c) for c in left_cols],
@@ -267,8 +284,7 @@ def asof_last_n(
     then explode the last-``n`` rank range and equi-join back — cost is
     O(n) output rows per left row, never left × all-earlier-history (the
     conditional-join formulation this replaced materialized every prior
-    right row per left row before ranking; see
-    :func:`asof_last_n_conditional`).
+    right row per left row before ranking).
     """
     payload = right_cols or [c for c in right.columns if c != partition_key]
     if n == 1:
@@ -312,34 +328,6 @@ def asof_last_n(
             c, F.lit(None).cast(dict(right.dtypes)[c])
         )
     return matched.unionByName(no_match)
-
-
-def asof_last_n_conditional(
-    left: DataFrame,
-    right: DataFrame,
-    partition_key: str,
-    left_ts: str,
-    right_ts: str,
-    n: int = 1,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """DIDACTIC variant — conditional join + window rank.  Materializes
-    every left-row × all-earlier-history pair before the rank filter, which
-    is explosive on high-fanout keys; kept only to document the naive
-    formulation :func:`asof_last_n` replaces.  Do not use at scale.
-    """
-    lhs = left.alias("l")
-    rhs = right.alias("r")
-    cond = (F.col(f"l.{partition_key}") == F.col(f"r.{partition_key}")) & (
-        F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}")
-    )
-    joined = lhs.join(rhs, cond, "left")
-    order = [F.col(f"r.{right_ts}").desc()]
-    if tiebreak:
-        order.append(F.col(f"r.{tiebreak}").desc())
-    w = Window.partitionBy(F.col(f"l.{left.columns[0]}")).orderBy(*order)
-    ranked = joined.withColumn("asof_rn", F.row_number().over(w))
-    return ranked.where((F.col("asof_rn") <= n) | F.col(f"r.{right_ts}").isNull())
 
 
 def theta_contains_join(
@@ -387,39 +375,16 @@ def asof_nearest_join(
     always wins as "prior"."""
     left_cols = list(left.columns)
     mt = "__mt"  # matched right ts (epoch micros), packed in the payload
-    rhs = right.select(
-        F.col(key).alias("__k"),
-        F.col(right_ts).alias("__t"),
-        F.lit(0).alias("__tag"),
-        F.struct(
+    merged, order = _asof_union_merge(
+        left, right, key, left_ts, right_ts,
+        [
             *[F.col(c) for c in payload_cols],
             F.unix_micros(F.col(right_ts).cast("timestamp")).alias(mt),
-        ).alias("__p"),
-        *[
-            F.lit(None).cast(dict(left.dtypes)[c]).alias(f"__l_{c}")
-            for c in left_cols
         ],
-        (F.col(right_tiebreak) if right_tiebreak else F.lit(0)).alias("__tb"),
+        right_tiebreak,
     )
-    lhs = left.select(
-        F.col(key).alias("__k"),
-        F.col(left_ts).alias("__t"),
-        F.lit(1).alias("__tag"),
-        F.lit(None).cast(rhs.schema["__p"].dataType).alias("__p"),
-        *[F.col(c).alias(f"__l_{c}") for c in left_cols],
-        F.lit(None).cast(rhs.schema["__tb"].dataType).alias("__tb"),
-    )
-    merged = rhs.unionByName(lhs)
-    back = (
-        Window.partitionBy("__k")
-        .orderBy("__t", "__tag", "__tb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fwd = (
-        Window.partitionBy("__k")
-        .orderBy("__t", "__tag", "__tb")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
+    back = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    fwd = order.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     carried = merged.select(
         "*",
         F.last("__p", ignorenulls=True).over(back).alias("__pb"),

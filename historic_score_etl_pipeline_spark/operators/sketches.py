@@ -12,12 +12,42 @@ partial aggregation (sketches combine associatively inside the hash
 aggregate); each stored sketch is ~KB regardless of input rows; any
 time-range / dimension rollup then touches only sketch rows.  Re-aggregating
 raw data per query is the thing this kills.
+
+The PORTABLE families below rebuild HyperLogLog and K-Minimum-Values from
+md5 and integer arithmetic only, so every register, every k-th minimum and
+every estimate is bit-equal on Spark and on the DuckDB oracle — which the
+engine-native Datasketches blob is not (its hash and layout are Spark's
+own).  Each family is one build (``hll_ranks`` → ``hll_registers``;
+``kmv_hashes`` → ``kmv_kth``), merged by the same aggregate it is built with
+(per-register ``max``; re-rank of the hash-set union), and one estimate
+(``hll_estimate`` / ``kmv_estimate``):
+
+* HLL: 256 registers (p = 8) indexed by md5 byte 0; rank = leading zeros of
+  a 60-bit md5 suffix + 1 via the base-2 STRING length (no float log); the
+  harmonic sum Σ 2^(35−min(ρ,35)) is exact integer arithmetic, one double
+  division at the end, LinearCounting below 2.5·m.
+* KMV: the k = 64 smallest distinct 60-bit md5 values per group; estimate
+  (k−1)·2⁶⁰ / h₍ₖ₎, exact count below k.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+# --- portable HyperLogLog constants --------------------------------------------
+_HLL_M = 256  # registers (p = 8)
+_HLL_ALPHA_M2 = 47072.71267120224  # 0.7213/(1+1.079/256) * 256²
+_HLL_RHO_CAP = 35
+_HLL_POW = float(1 << _HLL_RHO_CAP)  # 2^35
+# numerator folded to ONE double literal (a decimal-literal product
+# overflows DuckDB's DECIMAL inference; and one literal = one rounding)
+_HLL_EST_NUM = _HLL_ALPHA_M2 * _HLL_POW
+
+# --- portable K-Minimum-Values constants ---------------------------------------
+_KMV_K = 64
+_KMV_SPACE = float(1 << 60)
 
 
 def build_sketches(
@@ -126,3 +156,106 @@ def heavy_hitters_exact(
         .where(F.col("n") > threshold)
         .select(F.col("candidate").alias(item_col), "n")
     )
+
+
+# --- portable HyperLogLog ----------------------------------------------------------
+
+
+def hll_ranks(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
+    """``(group…, reg, rho)`` per row: the md5 register index of
+    ``value_col`` and its rank, the input of :func:`hll_registers`."""
+    h = F.md5(F.col(value_col).cast("string"))
+    reg = F.conv(F.substring(h, 1, 2), 16, 10).cast("long")
+    suffix = F.conv(F.substring(h, 3, 15), 16, 10).cast("long")
+    # rank = leading zeros of the 60-bit suffix + 1, via base-2 STRING
+    # length (conv drops leading zeros) — no float log2 to diverge
+    rho = F.when(suffix == 0, F.lit(61)).otherwise(
+        F.lit(61) - F.length(F.conv(suffix.cast("string"), 10, 2))
+    )
+    return df.select(*group_cols, reg.alias("reg"), rho.alias("rho"))
+
+
+def hll_registers(ranks: DataFrame, group_cols: list[str]) -> DataFrame:
+    """The portable HLL sketch per group: one ``(group…, reg, max_rho)``
+    row per hit register of the :func:`hll_ranks` rows.  The register
+    table IS the mergeable sketch — union is a per-register ``max`` — and
+    the (group, reg) max is map-side combinable: |groups|×256 rows of
+    state."""
+    return ranks.groupBy(*group_cols, "reg").agg(F.max("rho").alias("max_rho"))
+
+
+def hll_estimate(regs: DataFrame, group_cols: list[str]) -> DataFrame:
+    """``(group…, regs_hit, harmonic_fp, est)`` from the registers of
+    :func:`hll_registers`: registers hit, the exact integer harmonic
+    denominator, and the estimate (raw HLL, or LinearCounting m·ln(m/V)
+    while empty registers remain and the raw estimate is under 2.5·m)."""
+    # shiftleft's bit count must be a column here → spell it in SQL
+    pow_term = F.expr(
+        f"shiftleft(CAST(1 AS BIGINT), "
+        f"{_HLL_RHO_CAP} - least(max_rho, {_HLL_RHO_CAP}))"
+    )
+    folded = regs.groupBy(*group_cols).agg(
+        F.sum(pow_term).alias("s_hit"),
+        F.count(F.lit(1)).alias("m_hit"),
+    )
+    # empty registers contribute 2^35 each to the harmonic denominator
+    s_total = F.col("s_hit") + (F.lit(_HLL_M) - F.col("m_hit")) * F.lit(
+        1 << _HLL_RHO_CAP
+    )
+    raw = F.floor(
+        F.lit(_HLL_EST_NUM) / s_total.cast("double") + F.lit(0.5)
+    ).cast("long")
+    # V is an INTEGER so lc takes one of 256 values; the floor(x+0.5) at
+    # unit precision makes a 1-ulp cross-engine ln divergence harmless
+    # (the repo's micro-nat fixpoint convention).
+    v_zero = F.lit(_HLL_M) - F.col("m_hit")
+    lc = F.floor(
+        F.lit(float(_HLL_M))
+        * F.log(F.lit(float(_HLL_M)) / v_zero.cast("double"))
+        + F.lit(0.5)
+    ).cast("long")
+    est = F.when(
+        (v_zero > 0) & (raw <= F.lit(int(2.5 * _HLL_M))), lc
+    ).otherwise(raw)
+    return folded.select(
+        *group_cols,
+        F.col("m_hit").cast("long").alias("regs_hit"),
+        s_total.cast("long").alias("harmonic_fp"),
+        est.alias("est"),
+    )
+
+
+# --- portable K-Minimum-Values -----------------------------------------------------
+
+
+def kmv_hashes(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
+    """Distinct ``(group…, h)``: the 60-bit md5 value of ``value_col``."""
+    h = F.conv(
+        F.substring(F.md5(F.col(value_col).cast("string")), 1, 15), 16, 10
+    ).cast("long")
+    return df.select(*group_cols, h.alias("h")).distinct()
+
+
+def kmv_kth(hashes: DataFrame, group_cols: list[str]) -> DataFrame:
+    """``(group…, n, h_k)``: the distinct-hash count and the k-th smallest
+    hash per group (NULL below k).  ``hashes`` must be distinct per group;
+    a merged sketch is this over the distinct union of the hash sets."""
+    w = Window.partitionBy(*group_cols).orderBy("h")
+    return (
+        hashes.select(*group_cols, "h", F.row_number().over(w).alias("rk"))
+        .groupBy(*group_cols)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.when(F.col("rk") == _KMV_K, F.col("h"))).alias("h_k"),
+        )
+    )
+
+
+def kmv_estimate(n: Column, h_k: Column, rounded: bool = False) -> Column:
+    """(k−1)·2⁶⁰ / h₍ₖ₎, or the exact ``n`` below k.  A double, or with
+    ``rounded`` a long (half-up) — round only a final estimate, never the
+    terms of an inclusion–exclusion."""
+    raw = F.lit(float(_KMV_K - 1)) * F.lit(_KMV_SPACE) / h_k.cast("double")
+    if rounded:
+        return F.when(n < _KMV_K, n).otherwise(F.floor(raw + F.lit(0.5)))
+    return F.when(n < _KMV_K, n.cast("double")).otherwise(raw)

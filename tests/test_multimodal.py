@@ -255,3 +255,42 @@ def test_contract_modules_do_not_decode_media():
                 if "mapInPandas" in used and renderers & used:
                     offenders.append(f"{path.name}:{fn.name}: mapInPandas media")
     assert not offenders, offenders
+
+
+def test_contract_modules_hold_no_sketch_or_co_order_copies():
+    """Portable sketches and the co-order part graph have one home each
+    (operators/sketches, operators/graph.co_order_edges): no contract
+    module defines an ``_HLL_*``/``_KMV_*`` constant, names the
+    ``max_rho`` register column, or spells the ``a.l_partkey <
+    b.l_partkey`` self-join."""
+    import ast
+    from pathlib import Path
+
+    import historic_score_etl_pipeline_spark.contract as contract
+
+    def spells_self_join(node):
+        return (
+            isinstance(node, ast.Compare)
+            and isinstance(node.ops[0], ast.Lt)
+            and {"a.l_partkey", "b.l_partkey"}
+            <= {
+                c.value
+                for c in ast.walk(node)
+                if isinstance(c, ast.Constant) and isinstance(c.value, str)
+            }
+        )
+
+    offenders = []
+    for path in sorted(Path(contract.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Assign | ast.AnnAssign):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    if isinstance(t, ast.Name) and t.id.startswith(("_HLL_", "_KMV_")):
+                        offenders.append(f"{path.name}: defines {t.id}")
+            elif isinstance(node, ast.Constant) and node.value == "max_rho":
+                offenders.append(f"{path.name}:{node.lineno}: groups on max_rho")
+            if spells_self_join(node):
+                offenders.append(f"{path.name}:{node.lineno}: co-order self-join")
+    assert not offenders, offenders

@@ -1,5 +1,5 @@
 """Batch-36 behavior: bucketed co-located join (zero input exchanges),
-portable HLL accuracy + mergeability, deterministic mode, hash-ring
+portable HLL accuracy + engine-run mergeability, deterministic mode, hash-ring
 negatives, directional containment — recompute twins + plan pins."""
 
 from __future__ import annotations
@@ -13,6 +13,11 @@ import re
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import surface29
+from historic_score_etl_pipeline_spark.operators.sketches import (
+    hll_estimate,
+    hll_ranks,
+    hll_registers,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 
@@ -100,35 +105,19 @@ def test_hll_portable_accuracy_and_recompute(spark, sf_oracle):
 
 
 def test_hll_portable_is_mergeable(spark, sf_oracle):
-    """Sketch union = per-register max: the merged estimate over all
-    event types must equal the estimate computed from scratch over the
-    union of users — the defining property of a mergeable sketch."""
-    rows = load_table(spark, sf_oracle, "events").select("user_id").collect()
-    d: dict[int, int] = {}
-    for r in rows:
-        h = hashlib.md5(str(r["user_id"]).encode()).hexdigest()
-        reg, suffix = int(h[:2], 16), int(h[2:17], 16)
-        rho = 61 if suffix == 0 else 61 - len(bin(suffix)[2:])
-        d[reg] = max(d.get(reg, 0), rho)
-    direct_s = sum(1 << (35 - min(v, 35)) for v in d.values()) + (
-        256 - len(d)
-    ) * (1 << 35)
-
-    # merge the per-type sketches by register max, as a downstream
-    # rollup would
-    per_type = load_table(spark, sf_oracle, "events").select(
-        "event_type", "user_id"
-    ).collect()
-    merged: dict[int, int] = {}
-    for r in per_type:
-        h = hashlib.md5(str(r["user_id"]).encode()).hexdigest()
-        reg, suffix = int(h[:2], 16), int(h[2:17], 16)
-        rho = 61 if suffix == 0 else 61 - len(bin(suffix)[2:])
-        merged[reg] = max(merged.get(reg, 0), rho)
-    merged_s = sum(1 << (35 - min(v, 35)) for v in merged.values()) + (
-        256 - len(merged)
-    ) * (1 << 35)
-    assert merged_s == direct_s
+    """Sketch union = per-register max, run on the engine: the per-type
+    registers of ``hll_registers`` merged register by register must equal
+    the registers built directly over all users, and so must their
+    ``hll_estimate`` — the defining property of a mergeable sketch."""
+    ev = load_table(spark, sf_oracle, "events").select("event_type", "user_id")
+    per_type = hll_registers(hll_ranks(ev, ["event_type"], "user_id"), ["event_type"])
+    merged = per_type.groupBy("reg").agg(F.max("max_rho").alias("max_rho"))
+    direct = hll_registers(hll_ranks(ev, [], "user_id"), [])
+    merged_regs = sorted(merged.collect())
+    assert merged_regs == sorted(direct.collect())
+    # not vacuous: the merge folds several sketches into one
+    assert per_type.count() > len(merged_regs)
+    assert hll_estimate(merged, []).collect() == hll_estimate(direct, []).collect()
 
 
 def test_mode_deterministic_matches_python(spark, sf_oracle):

@@ -1,6 +1,6 @@
 """Batch-37 behavior: CUSUM closed form vs the sequential recurrence,
 integer-decay sum, Bloom bitmap, MinHash Jaccard estimate vs exact
-Jaccard, KMV accuracy — recompute twins + plan pins."""
+Jaccard, KMV accuracy and mergeability — recompute twins + plan pins."""
 
 from __future__ import annotations
 
@@ -13,6 +13,10 @@ import re
 from pyspark.sql import functions as F
 
 from historic_score_etl_pipeline_spark.contract import surface30
+from historic_score_etl_pipeline_spark.operators.sketches import (
+    kmv_hashes,
+    kmv_kth,
+)
 from historic_score_etl_pipeline_spark.sources.catalog import load_table
 
 
@@ -168,3 +172,17 @@ def test_kmv_accuracy(spark, sf_oracle):
             assert abs(est - n_true) <= max(5, 0.38 * n_true), (
                 et, est, n_true,
             )
+
+
+def test_kmv_portable_is_mergeable(spark, sf_oracle):
+    """Sketch union = re-rank of the hash-set union, run on the engine:
+    ``kmv_kth`` over the distinct union of the per-type hash sets must
+    equal ``kmv_kth`` over all distinct hashes built directly."""
+    ev = load_table(spark, sf_oracle, "events").select("event_type", "user_id")
+    per_type = kmv_hashes(ev, ["event_type"], "user_id")
+    merged = kmv_kth(per_type.select("h").distinct(), []).collect()
+    direct = kmv_kth(kmv_hashes(ev, [], "user_id"), []).collect()
+    assert merged == direct
+    # not vacuous: past k (h_k is set), and the union merges overlapping sets
+    assert merged[0]["n"] >= surface30._KMV_K and merged[0]["h_k"] is not None
+    assert per_type.count() > merged[0]["n"]
