@@ -4,8 +4,8 @@ rollups, and incremental materialized-view maintenance.
 * ``pipeline_referee`` — the reference's OTHER entry point
   (``app/ref_utilities.py:52-245``): three-hop enrichment into the
   ``ref_historic_match`` output shape, JSON only at the boundary.
-  Rows-only: the output's JSON-string columns are engine-formatted
-  (shape parity is unit-tested in tests/test_referee_pipeline.py).
+  Oracle-checked on every column, both JSON strings included (shape
+  parity is unit-tested in tests/test_referee_sketch_incremental.py).
 * ``agg_hll_mergeable`` — per-(day, event_type) HLL sketches rolled up
   to per-type distinct-user estimates by sketch UNION, no raw rescan.
   Rows-only: HLL estimates are engine-specific (the sketch-union ≡

@@ -11,9 +11,11 @@ fixture star schema:
   → nested doc assembly + to_json   ← json.dumps at :89,107,124,323
 
 Spark-first choices: the date filter lands on the parquet scan (predicate
-pushdown); the customer dimension join is broadcast; the history top-N is a
-window over a single shuffle by order key; collect_list is array_sorted for
-determinism; JSON appears only in the final projection (sink boundary).
+pushdown); the customer dimension join is broadcast; lineitem is cut to the
+fixtures' order keys by a broadcast semi-join before it shuffles, so the
+history aggregate only groups the orders the output emits; the history top-N
+is an aggregate-side slice (sorted collect_list, no window), array_sorted
+for determinism; JSON appears only in the final projection (sink boundary).
 """
 
 from __future__ import annotations
@@ -65,8 +67,13 @@ def flagship_pipeline(
         F.col("l_linenumber").alias("line"),
         F.col("l_quantity").alias("qty"),
     )
+    # Only the fixtures' orders are emitted: semi-join lineitem on their keys
+    # (broadcast — the key set is one column of the horizon's orders) so the
+    # detail columns of every other order never reach the shuffle.
+    needed = F.broadcast(fixtures.select(F.col("o_orderkey").alias("l_orderkey")))
     recent_lines = (
-        lineitem.groupBy("l_orderkey")
+        lineitem.join(needed, "l_orderkey", "left_semi")
+        .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_list(sort_key)).alias("all_lines"))
         .select(
             "l_orderkey",

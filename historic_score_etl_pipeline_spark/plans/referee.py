@@ -6,8 +6,14 @@ through three *sequential per-row HTTP loops* (hop 1: match → referee
 profile ``:113-131``; hop 2: profile → history links ``:134-166``; hop 3:
 links → history details ``:169-199``), attaching each hop's result as a
 column.  Here each hop is a broadcast left join and the per-match detail
-tables are sorted collect_lists — three shuffles total at any scale, with
-the fixture side staying on its original partitioning.
+tables are sorted collect_lists.  Like the reference, only the rows the
+output emits are looked up: the history links are restricted to the
+fixtures' referees, and lineitem is cut to those referees' history orders
+by a broadcast semi-join before the detail aggregate.  The plan shuffles
+twice — for the history-link min over the referees' orders (planned for
+hop 2 and for the key set, one exchange reused at run time) and for the
+detail aggregate over the cut lineitem — and the fixture side stays on its
+original partitioning.
 
 Output shape parity (§1.4), over the synthetic star schema:
 
@@ -91,10 +97,14 @@ def referee_pipeline(
     hop1 = fixtures.join(F.broadcast(profiles), "ref_key", "left")
 
     # Hop 2 — the referee's FIRST history link (limit-1 per key, G1):
-    # min over the referee's other orders; {"1": [link]} JSON shape.
+    # min over the referee's other orders; {"1": [link]} JSON shape.  Only
+    # the fixtures' referees are looked up, so the links are restricted to
+    # them (a semi-join Spark pushes below the min) — the same left-join
+    # result, and the key set hop 3 cuts lineitem down to.
     hist_links = (
         orders.groupBy(F.col("o_custkey").alias("ref_key"))
         .agg(F.min("o_orderkey").alias("hist_okey"))
+        .join(F.broadcast(fixtures.select("ref_key")), "ref_key", "left_semi")
         .select(
             "ref_key",
             "hist_okey",
@@ -123,8 +133,15 @@ def referee_pipeline(
             "red"
         ),
     )
+    # Only the referees' history orders are emitted (at most one per
+    # referee): semi-join lineitem on their keys before it shuffles.
+    # Broadcast like the hops — the key set is small whatever the size of
+    # lineitem, but its static estimate is the whole orders aggregate, and
+    # a sort-merge semi-join would shuffle every lineitem detail column.
+    hist_keys = F.broadcast(hist_links.select(F.col("hist_okey").alias("l_orderkey")))
     details = (
-        lineitem.groupBy(F.col("l_orderkey").alias("hist_okey"))
+        lineitem.join(hist_keys, "l_orderkey", "left_semi")
+        .groupBy(F.col("l_orderkey").alias("hist_okey"))
         .agg(F.array_sort(F.collect_list(detail_struct)).alias("rows"))
     )
     hop3 = hop2.join(details, "hist_okey", "left")

@@ -3,11 +3,11 @@
 
 Usage: python plans/r12/capture_plans.py <suffix> [name1,name2,...] [--executed]
 
-Writes plans/r12/<query>_<suffix>.txt for each named headline query (all of
-them plus the flagship when no names are given).  Each file holds the
-pre-execution ``explain("formatted")`` plan; with ``--executed`` the query is
-additionally FORCED through the noop sink and the post-AQE executed plan
-(``queryExecution().executedPlan()``) is appended — the evidence that
+Writes plans/r12/<query>_<suffix>.txt for each named headline query or
+``flagship`` (all headline queries plus the flagship when no names are
+given).  Each file holds the pre-execution ``explain("formatted")`` plan;
+with ``--executed`` the query is additionally run and the post-AQE executed
+plan (``queryExecution().executedPlan()``) is appended — the evidence that
 runtime re-optimization (AQE coalescing, broadcast demotion) kept the
 claimed shape.  Uses the same staged landing zone and split sizing as
 bench.py so scan nodes match what the bench times.
@@ -49,11 +49,11 @@ def main() -> None:
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(512 * 1024))
     spark.conf.set("spark.sql.files.openCostInBytes", str(128 * 1024))
 
-    qs = contract.queries()
+    qs = {**contract.queries(), "flagship": flagship_pipeline}
     out_dir = os.path.join(REPO_ROOT, "plans", "r12")
-    targets = [(n, lambda n=n: qs[n](spark, sf_dir)) for n in names]
     if len(args) <= 1:
-        targets.append(("flagship", lambda: flagship_pipeline(spark, sf_dir)))
+        names = names + ["flagship"]
+    targets = [(n, lambda n=n: qs[n](spark, sf_dir)) for n in names]
     import io
     from contextlib import redirect_stdout
 
@@ -65,7 +65,9 @@ def main() -> None:
                 df.explain("formatted")
             plan = buf.getvalue()
             if executed:
-                df.write.format("noop").mode("overwrite").save()
+                # run the DataFrame's own query execution: a noop write
+                # plans a fresh one, leaving this plan at isFinalPlan=false
+                df._jdf.queryExecution().toRdd().count()
                 plan += "\n\n=== executed plan (post-AQE) ===\n"
                 plan += df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # noqa: BLE001

@@ -119,6 +119,67 @@ def test_flagship_has_no_sort_or_window(spark, sf_oracle):
     assert "BroadcastHashJoin" in plan
 
 
+def _plan_tree(
+    plan: str,
+) -> tuple[dict[int, str], dict[int, int | None], dict[int, str]]:
+    """(node name, parent id, detail block) per node id of a formatted plan."""
+    import re
+
+    tree = plan.split("== Physical Plan ==\n", 1)[1].split("\n\n", 1)[0]
+    names: dict[int, str] = {}
+    parents: dict[int, int | None] = {}
+    stack: list[tuple[int, int]] = []  # (depth, id) of the open ancestors
+    for line in tree.splitlines():
+        m = re.match(r"^(.*?)([+:]- )?(?:\* )?([A-Za-z].*?) \((\d+)\)$", line)
+        depth = len(m.group(1)) + len(m.group(2) or "")
+        node = int(m.group(4))
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        names[node] = m.group(3)
+        parents[node] = stack[-1][1] if stack else None
+        stack.append((depth, node))
+    details = {
+        int(m.group(1)): m.group(2)
+        for m in re.finditer(r"^\((\d+)\) .*?\n(.*?)(?=\n\n|\Z)", plan, re.M | re.S)
+    }
+    return names, parents, details
+
+
+def test_nightly_history_aggregates_read_reduced_lineitem(spark, sf_oracle):
+    """Both nightly plans emit history for a few orders only, so lineitem
+    is cut to the needed order keys by a broadcast semi-join sitting right
+    on its scan, below the collect_list aggregate — the detail columns of
+    every other order never reach the shuffle.  The broadcast is pinned in
+    the plan, not left to AQE's runtime demotion, and no sort-merge join
+    (which would shuffle all of lineitem to do the cut) may appear."""
+    from historic_score_etl_pipeline_spark.plans.flagship import flagship_pipeline
+    from historic_score_etl_pipeline_spark.plans.referee import referee_pipeline
+
+    static = spark.newSession()
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    for session in (spark, static):
+        for pipeline in (flagship_pipeline, referee_pipeline):
+            plan = explain_str(pipeline(session, sf_oracle))
+            assert "SortMergeJoin" not in plan, plan
+            names, parents, details = _plan_tree(plan)
+            scans = [n for n, name in names.items()
+                     if name.startswith("Scan parquet")
+                     and "lineitem.parquet" in details[n]]
+            assert len(scans) == 1, plan
+            path, node = [], parents[scans[0]]
+            while node is not None:
+                path.append(node)
+                node = parents[node]
+            agg = next(i for i, n in enumerate(path)
+                       if "collect_list(" in details[n])
+            below = [names[n] for n in path[:agg]]
+            assert below[-1] == "BroadcastHashJoin LeftSemi BuildRight", (
+                pipeline.__name__, below, plan)
+            # nothing but row-local operators between the scan and the cut
+            assert set(below[:-1]) <= {"Filter", "ColumnarToRow", "Project"}, (
+                pipeline.__name__, below, plan)
+
+
 def test_minhash_fold_compiles_small():
     """The MinHash fold keeps the expression tree constant-size in
     num_hashes: the unrolled form grew ~linearly and took ~45 s of codegen
