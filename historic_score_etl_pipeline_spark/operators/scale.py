@@ -19,8 +19,12 @@ These are the knobs that matter at 100 TB:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from historic_score_etl_pipeline_spark.sinks.merge import committed, publish
 
 
 def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -175,39 +179,18 @@ def compact_small_files(
 
     Streaming/incremental sinks accrete small files; at 100 TB the task
     scheduler and the parquet footer reads, not the data, become the
-    cost.  Compaction = read → coalesce to ceil(bytes/target) → rewrite
-    (staged, then swapped, since Spark cannot overwrite its own input).
+    cost.  Compaction = read → coalesce to ceil(bytes/target) → one
+    ``sinks.merge.publish`` over the same path (Spark cannot overwrite its
+    own input; publish writes a sibling once and swaps it in by rename).
     Returns the new file count.  Table formats schedule this as OPTIMIZE;
     the dataflow is the same.
     """
-    import math
-    import os
-    import shutil
-    import tempfile
-
-    total = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
+    table = committed(spark, path)
+    # the bytes of the data files Spark lists (its own relation size)
+    total = table._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     n_files = max(1, math.ceil(total / target_file_bytes))
-    scratch = tempfile.mkdtemp(prefix="compact_")
-    try:
-        spark.read.parquet(path).coalesce(n_files).write.mode(
-            "overwrite"
-        ).parquet(scratch)
-        spark.read.parquet(scratch).coalesce(n_files).write.mode(
-            "overwrite"
-        ).parquet(path)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return sum(
-        1
-        for r, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
+    publish(table.coalesce(n_files), path)
+    return len(spark.read.parquet(path).inputFiles())
 
 
 def write_sorted_ranges(

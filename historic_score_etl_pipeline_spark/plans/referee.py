@@ -55,7 +55,7 @@ def referee_pipeline(
     horizon_days: int = 60,
 ) -> DataFrame:
     """Fixtures (orders) in a horizon → referee profile (customer) →
-    first history link (the referee's earliest other order) → history
+    first history link (the referee's lowest order key, fixture included) → history
     detail table (that order's line items), emitted in the reference's
     ref_historic_match shape."""
     orders = load_table(spark, sf_dir, "orders")
@@ -96,11 +96,11 @@ def referee_pipeline(
     )
     hop1 = fixtures.join(F.broadcast(profiles), "ref_key", "left")
 
-    # Hop 2 — the referee's FIRST history link (limit-1 per key, G1):
-    # min over the referee's other orders; {"1": [link]} JSON shape.  Only
-    # the fixtures' referees are looked up, so the links are restricted to
-    # them (a semi-join Spark pushes below the min) — the same left-join
-    # result, and the key set hop 3 cuts lineitem down to.
+    # Hop 2 — the referee's FIRST history link (limit-1 per key, G1): min
+    # over ALL the referee's orders, the fixture included; {"1": [link]}
+    # JSON.  Only the fixtures' referees are looked up, so the links are
+    # restricted to them (a semi-join Spark pushes below the min) — the
+    # same left-join result, and the key set hop 3 cuts lineitem down to.
     hist_links = (
         orders.groupBy(F.col("o_custkey").alias("ref_key"))
         .agg(F.min("o_orderkey").alias("hist_okey"))

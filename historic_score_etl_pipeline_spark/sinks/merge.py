@@ -10,31 +10,90 @@ would use underneath:
 * **latest-version-wins** resolution via one window pass — no driver-side
   row handling, so the merge itself scales with the cluster;
 * **partition-scoped rewrite**: when the target is partitioned, only the
-  partitions present in the update batch are read AND rewritten (dynamic
-  partition overwrite).  At 100 TB this is the difference between
+  partitions present in the update batch are read AND rewritten (only
+  their directories are swapped).  At 100 TB this is the difference between
   touching 3 date partitions and rewriting the table;
 * **idempotence**: applying the same update batch twice yields the same
   table state (the precedence ordering is total), which is what makes
   the reference's retry loop safe to express as Spark task/job retries.
 
-Plain parquet has no transactional metadata swap, so the merged result
-must be staged to a scratch path before overwriting the target (Spark
-refuses to overwrite a path it is concurrently reading — and working
-around that lazily would corrupt on failure).  A table format replaces
-the stage+swap with an atomic manifest commit; the dataflow is identical.
+Plain parquet has no transactional metadata swap, and ``mode("overwrite")``
+deletes the target before its write job runs, so ``publish`` is the one way
+a table is replaced: ONE write to a hidden sibling of the target
+(``.<name>.publish``, committed by Spark's ``_SUCCESS``), then a rename swap
+of the whole directory or, with ``partition_col``, of only the ``col=val``
+directories it holds; the displaced ones wait in ``.<name>.old``.  Each call
+first rolls a committed stage forward and drops an uncommitted one, so a
+crash anywhere converges on the next call.  Paths go through the target's
+Hadoop ``FileSystem``, not the driver's disk.  A table format replaces the
+swap with an atomic manifest commit (the dataflow is identical); on object
+stores, where rename is not atomic, that table format is required.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _PRECEDENCE = "__merge_precedence"
 _RANK = "__merge_rank"
+
+
+def publish(df: DataFrame, target: str, partition_col: str | None = None) -> None:
+    """Replace the parquet table at ``target`` with ``df`` — with
+    ``partition_col``, only the partitions ``df`` holds — by one write to
+    the sibling stage and a rename swap."""
+    _, _, stage = _roll_forward(df.sparkSession, target, partition_col)
+    writer = df.write.mode("overwrite")
+    if partition_col:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(stage.toString())
+    _roll_forward(df.sparkSession, target, partition_col)
+
+
+def committed(
+    spark: SparkSession, target: str, partition_col: str | None = None
+) -> DataFrame | None:
+    """The table at ``target`` after any interrupted ``publish`` to it is
+    finished or discarded; None while it holds no data files."""
+    fs, t, _ = _roll_forward(spark, target, partition_col)
+    if fs.globStatus(t.suffix("/[!_.]*")):  # not only _SUCCESS or hidden files
+        return spark.read.parquet(t.toString())
+    return None
+
+
+def _roll_forward(spark: SparkSession, target: str, partition_col: str | None):
+    """Swap a committed stage into ``target`` (a rename done before a crash
+    is skipped on the rerun), then delete the stage and the displaced
+    directories.  Returns the ``FileSystem``, target path and stage path."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    t = Path(target)
+    fs = t.getFileSystem(spark._jsc.hadoopConfiguration())
+    t = fs.makeQualified(t)
+    stage = Path(t.getParent(), f".{t.getName()}.publish")
+    old = Path(t.getParent(), f".{t.getName()}.old")
+    if fs.exists(Path(stage, "_SUCCESS")):
+        moves = [(stage, t)]
+        if partition_col and fs.exists(t):
+            moves = [
+                (s.getPath(), Path(t, s.getPath().getName()))
+                for s in fs.listStatus(stage)
+                if s.getPath().getName().startswith(f"{partition_col}=")
+            ]
+        fs.mkdirs(old)
+        for src, dst in moves:
+            if fs.exists(dst):
+                _rename(fs, dst, Path(old, dst.getName()))
+            _rename(fs, src, dst)
+    fs.delete(old, True)
+    fs.delete(stage, True)
+    return fs, t, stage
+
+
+def _rename(fs, src, dst) -> None:
+    """A rename that raises when refused (the seam the fault tests patch)."""
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src} to {dst}")
 
 
 def merge_upsert(
@@ -52,51 +111,16 @@ def merge_upsert(
     row.  With ``partition_col``, only partitions present in ``updates``
     are read and rewritten.
     """
-    exists = os.path.isdir(target_dir) and any(
-        not f.startswith(("_", ".")) for f in os.listdir(target_dir)
-    )
-    if not exists:
-        resolved = _dedupe(updates.withColumn(_PRECEDENCE, F.lit(1)), key_cols, version_col)
-        writer = resolved.write.mode("overwrite")
+    merged = updates.withColumn(_PRECEDENCE, F.lit(1))
+    base = committed(spark, target_dir, partition_col)
+    if base is not None:
         if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(target_dir)
-        return
-
-    base = spark.read.parquet(target_dir)
-    if partition_col:
-        touched = [
-            r[0] for r in updates.select(partition_col).distinct().collect()
-        ]
-        base = base.where(F.col(partition_col).isin(touched))
-
-    merged = _dedupe(
-        base.withColumn(_PRECEDENCE, F.lit(0)).unionByName(
-            updates.withColumn(_PRECEDENCE, F.lit(1))
-        ),
-        key_cols,
-        version_col,
-    )
-
-    # Stage, then swap/overwrite — never overwrite the path being read.
-    scratch = tempfile.mkdtemp(prefix="merge_stage_")
-    try:
-        stage_writer = merged.write.mode("overwrite")
-        if partition_col:
-            stage_writer = stage_writer.partitionBy(partition_col)
-        stage_writer.parquet(scratch)
-
-        staged = spark.read.parquet(scratch)
-        final_writer = staged.write.mode("overwrite")
-        if partition_col:
-            # Dynamic mode: only partitions present in `staged` are
-            # replaced; untouched partitions' files stay as-is.
-            final_writer = final_writer.partitionBy(partition_col).option(
-                "partitionOverwriteMode", "dynamic"
-            )
-        final_writer.parquet(target_dir)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+            touched = [
+                r[0] for r in updates.select(partition_col).distinct().collect()
+            ]
+            base = base.where(F.col(partition_col).isin(touched))
+        merged = base.withColumn(_PRECEDENCE, F.lit(0)).unionByName(merged)
+    publish(_dedupe(merged, key_cols, version_col), target_dir, partition_col)
 
 
 def scd2_apply(
@@ -126,10 +150,8 @@ def scd2_apply(
     upd = updates.select(
         *key_cols, *attr_cols, F.col(effective_col).alias("_eff")
     )
-    exists = os.path.isdir(target_dir) and any(
-        not f.startswith(("_", ".")) for f in os.listdir(target_dir)
-    )
-    if not exists:
+    base = committed(spark, target_dir)
+    if base is None:
         fresh = upd.select(
             *key_cols,
             *attr_cols,
@@ -137,10 +159,9 @@ def scd2_apply(
             F.lit(None).cast("date").alias("valid_to"),
             F.lit(True).alias("is_current"),
         )
-        fresh.write.mode("overwrite").parquet(target_dir)
+        publish(fresh, target_dir)
         return
 
-    base = spark.read.parquet(target_dir)
     history = base.where(~F.col("is_current"))
     current = base.where(F.col("is_current"))
 
@@ -186,14 +207,7 @@ def scd2_apply(
         F.lit(True).alias("is_current"),
     )
 
-    merged = history.unionByName(kept_current).unionByName(opened)
-
-    scratch = tempfile.mkdtemp(prefix="scd2_stage_")
-    try:
-        merged.write.mode("overwrite").parquet(scratch)
-        spark.read.parquet(scratch).write.mode("overwrite").parquet(target_dir)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    publish(history.unionByName(kept_current).unionByName(opened), target_dir)
 
 
 def _dedupe(

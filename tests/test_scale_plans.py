@@ -762,6 +762,38 @@ def test_contract_collect_allowlist():
     )
 
 
+def test_publish_is_the_only_table_replacement():
+    """Replacing a parquet table has one home, ``sinks.merge.publish``
+    (one write to a sibling stage, a rename swap, rolled forward on the
+    next call).  No sink module and not ``operators/scale.py`` stages a
+    table through a driver-local ``tempfile`` or deletes one with
+    ``shutil.rmtree``."""
+    import ast
+    import glob
+    import os
+
+    import historic_score_etl_pipeline_spark.operators.scale as scale
+    import historic_score_etl_pipeline_spark.sinks as sinks
+
+    paths = sorted(glob.glob(os.path.join(os.path.dirname(sinks.__file__), "*.py")))
+    offenders = []
+    for path in [*paths, scale.__file__]:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                used = {a.name for a in node.names}
+            elif isinstance(node, ast.ImportFrom):
+                used = {node.module, *(f"{node.module}.{a.name}" for a in node.names)}
+            elif isinstance(node, ast.Attribute):
+                used = {node.attr}
+            else:
+                continue
+            if used & {"tempfile", "shutil.rmtree", "rmtree"}:
+                offenders.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not offenders, offenders
+
+
 def test_contract_int_product_overflow_audit():
     """int64-overflow-product audit (VERDICT r7 ask #3): the sf0.1 sweep
     caught ``event_did_estimator`` and review caught
