@@ -511,7 +511,7 @@ WHERE rank <= 5
 
 def sim_topk_cosine_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with a kmeans-trained coarse quantizer (Lloyd's on the corpus,
-    broadcast centroids, n_probe nearest-cell scan).  Approximate →
+    numpy nearest-centroid kernel, n_probe nearest-cell scan).  Approximate →
     rows-only; recall floor vs. brute force asserted in
     tests/test_similarity.py::test_ivf_kmeans_recall_beats_floor."""
     emb = valid_vectors(load_table(spark, sf_dir, "embeddings"))

@@ -639,10 +639,11 @@ def udaf_grouped_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative algorithm surface (Lloyd's k-means over the embeddings
-    table, 2 rounds): per round a map-only broadcast-centroid assignment
-    + one (cluster, dim) shuffle to re-average; only the k×d centroid
-    matrix visits the driver.  Rows-only (iterative, no ANSI-SQL twin);
-    numpy step-parity is pinned in tests/test_kmeans.py."""
+    table, 2 rounds): per round one map-only job whose numpy kernel takes
+    the centroids as an argument and returns per-batch partial sums, which
+    the driver re-averages; only k×d numbers visit the driver.  Rows-only
+    (iterative, no ANSI-SQL twin); numpy step-parity is pinned in
+    tests/test_kmeans.py."""
     from historic_score_etl_pipeline_spark.operators.similarity import kmeans_lite
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -179,17 +179,23 @@ def compact_small_files(
 
     Streaming/incremental sinks accrete small files; at 100 TB the task
     scheduler and the parquet footer reads, not the data, become the
-    cost.  Compaction = read → coalesce to ceil(bytes/target) → one
+    cost.  Compaction = read → ceil(bytes/target) partitions → one
     ``sinks.merge.publish`` over the same path (Spark cannot overwrite its
     own input; publish writes a sibling once and swaps it in by rename).
-    Returns the new file count.  Table formats schedule this as OPTIMIZE;
-    the dataflow is the same.
+    Fewer partitions than the read has is a ``coalesce`` (no shuffle);
+    more is a ``repartition``, because the read packs small files into few
+    splits and ``coalesce`` cannot split them again.  Returns the new file
+    count.  Table formats schedule this as OPTIMIZE; the dataflow is the
+    same.
     """
     table = committed(spark, path)
     # the bytes of the data files Spark lists (its own relation size)
     total = table._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     n_files = max(1, math.ceil(total / target_file_bytes))
-    publish(table.coalesce(n_files), path)
+    if n_files > table.rdd.getNumPartitions():
+        publish(table.repartition(n_files), path)
+    else:
+        publish(table.coalesce(n_files), path)
     return len(spark.read.parquet(path).inputFiles())
 
 

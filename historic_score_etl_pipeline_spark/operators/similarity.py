@@ -2,8 +2,16 @@
 
 Brute-force cosine top-k is the correctness baseline: broadcast the (small)
 query set against the (huge) corpus — one pass, no shuffle of the corpus,
-`O(corpus × queries × dim)` multiply-adds all inside whole-stage codegen
-(``zip_with`` + ``aggregate``, no Python).
+`O(corpus × queries × dim)` multiply-adds as ``zip_with`` + ``aggregate``
+expressions, no Python.  Spark evaluates those higher-order functions
+interpreted: a ``Project`` holding them falls out of whole-stage codegen.
+
+The k-means family — Lloyd rounds, cluster assignment, the IVF probe
+ranking — and ``semantic_dedup``'s within-cluster pruning therefore run as
+numpy kernels over Arrow batches (``mapInArrow`` /
+``groupBy().applyInArrow``) that take the centroids as an argument, so
+their plans do not grow with k and do not change between rounds; they
+reproduce the expressions' sums bit for bit (see the kernel section).
 
 The scale path is IVF-style partition pruning: coarse cells (in
 ``ivf_topk`` the sign pattern of the first log2(n_cells) dimensions, in
@@ -14,9 +22,20 @@ the cells nearest the query — the REPOSE/EDBT'20 pruning idea
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
+
+from historic_score_etl_pipeline_spark.operators.pins import pin
 
 
 # Quarantine-gate policy (ADVICE r9, adversarial NULL-element row): a
@@ -220,30 +239,161 @@ def ivf_topk(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def _sq_dist(vec: Column, cen: Column) -> Column:
-    """Squared L2 distance between two double-array columns."""
-    return F.aggregate(
-        F.zip_with(vec, cen, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, e: acc + e,
+# --- vector kernels: numpy over Arrow batches -------------------------------
+#
+# Every nearest-centroid question (a Lloyd round, a cluster assignment, an
+# IVF probe ranking) and semantic_dedup's within-cluster pruning run in numpy
+# over Arrow batches, with the centroids passed to the kernel as a Python
+# argument: the plan is the same for every k and every round, and no plan
+# carries k×d literals.  Each sum runs over the dimensions in order, starting
+# from 0.0 — the fold ``aggregate(zip_with(...), 0.0, +)`` does — so every
+# distance, dot product and norm is bit-identical to that Spark expression
+# (``.sum(axis=...)`` sums pairwise and is not).  Vectors are assumed finite.
+
+_BLOCK = 256  # rows compared at once within a cluster: memory ∝ _BLOCK × |cluster|
+
+
+def _matrix(col) -> np.ndarray:
+    """A ``list<double>`` Arrow column without NULLs as an (n, d) float64
+    matrix; every vector must have the same length."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    lengths = np.diff(col.offsets.to_numpy())
+    d = int(lengths[0]) if len(lengths) else 0
+    if np.any(lengths != d):
+        raise ValueError("vectors of unequal length")
+    return flat.reshape(len(col), d)
+
+
+def _sq_dists(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n, k) squared L2 distances of the rows of ``X`` to the centroids."""
+    if X.shape[1] != C.shape[1]:
+        raise ValueError(f"{X.shape[1]}-d vectors against {C.shape[1]}-d centroids")
+    out = np.zeros((len(X), len(C)))
+    for j in range(X.shape[1]):
+        diff = X[:, j, None] - C[None, :, j]
+        out += diff * diff
+    return out
+
+
+def _dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(m, n) dot products of the rows of ``A`` with the rows of ``B``."""
+    out = np.zeros((len(A), len(B)))
+    for j in range(A.shape[1]):
+        out += A[:, j, None] * B[None, :, j]
+    return out
+
+
+def _nearest_cells(X: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:
+    """(rows, n) indices of each row's ``n`` nearest centroids, in
+    (distance, index) order: of equal distances the lower index comes
+    first, as ``array_position(d, array_min(d))`` picks it."""
+    return np.argsort(_sq_dists(X, C), axis=1, kind="stable")[:, :n]
+
+
+def _features(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, vec) with ``vec`` as double[], malformed vectors dropped."""
+    return valid_vectors(df, vec_col).select(
+        F.col(id_col), as_double_array(vec_col).alias("vec")
     )
+
+
+def _nearest(feats: DataFrame, centroids, n: int = 1) -> DataFrame:
+    """``feats`` (id, vec) plus a ``cluster`` column: each row once for each
+    of its ``n`` nearest centroids.  One map pass, no shuffle; at ``n=1``
+    it is the nearest-centroid assignment."""
+    C = np.asarray(centroids, dtype=np.float64)
+    schema = StructType(
+        feats.schema.fields + [StructField("cluster", IntegerType())]
+    )
+
+    def cells(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            X = _matrix(b.column("vec"))
+            if not len(X):
+                continue
+            cell = _nearest_cells(X, C, n)
+            rows = pa.array(np.repeat(np.arange(len(X)), cell.shape[1]))
+            yield pa.RecordBatch.from_arrays(
+                [c.take(rows) for c in b.columns]
+                + [pa.array(cell.ravel().astype(np.int32))],
+                names=schema.fieldNames(),
+            )
+
+    return feats.mapInArrow(cells, schema)
+
+
+def _lloyd_step(feats: DataFrame, centroids) -> DataFrame:
+    """One Lloyd round as a fixed, map-only plan: each Arrow batch of
+    ``feats`` assigns its vectors to the nearest of ``centroids`` and
+    emits one (cluster, n, sum) row per cluster it touched — the partial
+    state the driver adds up into the new means."""
+    C = np.asarray(centroids, dtype=np.float64)
+
+    def step(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            X = _matrix(b.column("vec"))
+            if not len(X):
+                continue
+            cell = _nearest_cells(X, C, 1)[:, 0]
+            sums = np.zeros_like(C)
+            np.add.at(sums, cell, X)  # row order, like a running sum
+            counts = np.bincount(cell, minlength=len(C))
+            hit = np.flatnonzero(counts)
+            offsets = np.arange(len(hit) + 1, dtype=np.int32) * C.shape[1]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(hit.astype(np.int32)),
+                    pa.array(counts[hit]),
+                    pa.ListArray.from_arrays(
+                        pa.array(offsets), pa.array(sums[hit].ravel())
+                    ),
+                ],
+                names=["cluster", "n", "sum"],
+            )
+
+    return feats.select("vec").mapInArrow(
+        step, "cluster int, n long, sum array<double>"
+    )
+
+
+def _lloyd(
+    feats: DataFrame, id_col: str, k: int, iters: int
+) -> tuple[list[list[float]], list[list[float]]]:
+    """Lloyd's rounds over ``feats`` (id, vec), initialised with the first
+    ``k`` vectors by id; empty clusters keep their centroid.  Returns the
+    centroids after the last update and the centroids the last round
+    assigned with."""
+    first = feats.orderBy(id_col).limit(k).select("vec").collect()
+    C = np.array([r["vec"] for r in first], dtype=np.float64)
+    used = C
+    for _ in range(iters if len(C) else 0):
+        used, C = C, C.copy()
+        sums = np.zeros_like(C)
+        counts = np.zeros(len(C), dtype=np.int64)
+        for r in _lloyd_step(feats, used).collect():
+            sums[r["cluster"]] += r["sum"]
+            counts[r["cluster"]] += r["n"]
+        hit = counts > 0
+        C[hit] = sums[hit] / counts[hit, None]
+    return C.tolist(), used.tolist()
 
 
 def assign_to_centroids(
     corpus: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
 ) -> DataFrame:
-    """Nearest-centroid assignment: centroids ship as a broadcast-sized
-    literal, distances evaluate in codegen, argmin by (distance, index)
-    with first-wins tie-break.  Zero shuffle — pure map over the corpus."""
-    cen_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
-    vec = as_double_array(vec_col)
-    dists = F.transform(cen_lit, lambda c: _sq_dist(vec, c))
-    best = F.array_position(dists, F.array_min(dists)).cast("int") - 1
-    return corpus.select(
-        F.col(id_col), vec.alias("vec"), best.alias("cluster")
-    )
+    """Nearest-centroid assignment (id, vec, cluster): one numpy map pass
+    with ``centroids`` as a kernel argument, argmin with first-wins ties.
+    Zero shuffle; malformed vectors (see :func:`valid_vectors`) have no
+    cluster and are dropped."""
+    return _nearest(_features(corpus, id_col, vec_col), centroids)
 
 
 def kmeans_lite(
@@ -256,53 +406,24 @@ def kmeans_lite(
     """Lloyd's k-means as iterative DataFrame jobs (SURVEY.md §2K-K3's
     IVF coarse quantizer, trained for real).
 
-    Per iteration: broadcast the k×d centroid literal into a map-only
-    assignment pass, then recompute means with posexplode → one shuffle
-    on (cluster, dim) — the classic two-job Lloyd step.  Only the k×d
-    centroid matrix ever visits the driver (same contract as MLlib's
-    KMeans), so 100 TB of vectors stream through unchanged.  Empty
-    clusters keep their previous centroid.  Init = first k vectors by id
-    (deterministic).
+    Each round is one map-only job: a numpy kernel, with the k×d centroid
+    matrix as its argument, assigns every Arrow batch and returns per-batch
+    partial sums and counts, which the driver adds into the new means.  Only
+    k×d numbers ever visit the driver (same contract as MLlib's KMeans), so
+    100 TB of vectors stream through unchanged.  Empty clusters keep their
+    previous centroid.  Init = first k vectors by id (deterministic).
+    Malformed vectors are excluded (:func:`valid_vectors`).
+
+    Returns the centroids after the last round and that round's
+    assignment (id, cluster).  The features are pinned
+    (``operators/pins``): the assignment reads the pinned blocks, not the
+    source, and ``release_pins()`` frees them once it is consumed.
     """
-    # Column-pruned feature set persisted across Lloyd iterations: each
-    # round re-reads executor-local cached blocks (MEMORY_AND_DISK spills
-    # rather than evicts), not the source table — at 100 TB the source
-    # scan happens exactly once.
-    from pyspark import StorageLevel
-
-    # Quarantine gate: a malformed vector has no cluster — un-gated it
-    # would surface as a NULL cluster id and crash the driver-side
-    # centroid fold (`centroids[None]`, the adversarial NULL-element row)
-    feats = valid_vectors(corpus, vec_col).select(
-        F.col(id_col), as_double_array(vec_col).alias("__feat")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    first = feats.orderBy(id_col).limit(k).select(F.col("__feat").alias("v"))
-    centroids = [list(r["v"]) for r in first.collect()]
-
-    assigned = None
-    for _ in range(iters):
-        assigned = assign_to_centroids(feats, id_col, "__feat", centroids)
-        means = (
-            assigned.select(
-                "cluster", F.posexplode("vec").alias("dim", "x")
-            )
-            .groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-            .select(
-                "cluster",
-                F.transform(F.col("dm"), lambda s: s["m"]).alias("centroid"),
-            )
-            .collect()
-        )
-        for row in means:
-            centroids[row["cluster"]] = list(row["centroid"])
-    # Release the cached blocks; the returned assignment recomputes from
-    # the source if acted on later (one scan, converged centroids).
-    feats.unpersist(blocking=False)
-    return centroids, assigned.select(id_col, "cluster")
+    # one pass over the source: every round and the assignment read the
+    # pinned (executor-local, spill-to-disk) blocks
+    feats = pin(_features(corpus, id_col, vec_col))
+    centroids, used = _lloyd(feats, id_col, k, iters)
+    return centroids, _nearest(feats, used).select(id_col, "cluster")
 
 
 def ivf_topk_kmeans(
@@ -322,41 +443,20 @@ def ivf_topk_kmeans(
     cells — data-adaptive pruning that beats the fixed sign-pattern cells
     of :func:`ivf_topk` on clustered data.
 
-    At scale: the k×d centroid matrix is the only driver-side state;
-    cell assignment is a broadcast map pass; the probe join shuffles the
-    (tiny) query side only.  Recall < 1 by design — the test suite pins a
-    floor against brute force.
+    At scale: the k×d centroid matrix is the only driver-side state; cell
+    assignment and the probe ranking are map passes of the same numpy
+    kernel; the probe join shuffles the (tiny) query side only.  Malformed
+    vectors, in the corpus or among the queries, are excluded.  Recall < 1
+    by design — the test suite pins a floor against brute force.
     """
-    centroids, _ = kmeans_lite(
-        corpus, corpus_id, vec_col, k=n_cells, iters=train_iters
+    feats = pin(_features(corpus, corpus_id, vec_col))
+    centroids, _ = _lloyd(feats, corpus_id, n_cells, train_iters)
+    c = _nearest(feats, centroids).select(
+        F.col(corpus_id).alias("corpus_id"), F.col("vec").alias("cvec"), "cluster"
     )
-    c = (
-        assign_to_centroids(corpus, corpus_id, vec_col, centroids)
-        .withColumnRenamed(corpus_id, "corpus_id")
-        .withColumnRenamed("vec", "cvec")
-    )
-
-    cen_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in cc]) for cc in centroids]
-    )
-    qvec = as_double_array(vec_col)
-    dists = F.transform(cen_lit, lambda cc: _sq_dist(qvec, cc))
-    # n_probe nearest cells: sort (dist, idx) structs, take the prefix
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                dists,
-                lambda d, i: F.struct(d.alias("d"), i.alias("cell")),
-            )
-        ),
-        1,
-        n_probe,
-    )
-    probes = queries.select(
-        F.col(query_id).alias("query_id"),
-        qvec.alias("qvec"),
-        F.explode(F.transform(ranked, lambda s: s["cell"])).alias("cluster"),
-    )
+    probes = _nearest(
+        _features(queries, query_id, vec_col), centroids, n_probe
+    ).select(F.col(query_id).alias("query_id"), F.col("vec").alias("qvec"), "cluster")
 
     scored = (
         c.join(F.broadcast(probes), "cluster")
@@ -401,6 +501,62 @@ def quantize_int8(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def _round_ge(x: np.ndarray, scale: int, threshold: float) -> np.ndarray:
+    """``round(x, scale) >= threshold`` elementwise, decided as Spark
+    decides it: HALF_UP on the value's shortest decimal string
+    (``BigDecimal.valueOf``).  ``np.round`` rounds half to even on the
+    binary value, which decides ``.xxxx5`` cases differently.  Rounding
+    moves a value by at most half a unit of the last kept place, so only
+    values within one unit of the threshold need the exact rule."""
+    unit = 10.0**-scale
+    out = x >= threshold + unit
+    for i in np.flatnonzero(~out & (x > threshold - unit)):
+        r = Decimal(repr(float(x.flat[i]))).quantize(
+            Decimal(1).scaleb(-scale), rounding=ROUND_HALF_UP
+        )
+        out.flat[i] = float(r) >= threshold
+    return out
+
+
+def _pruner(id_col: str, threshold: float):
+    """The per-cluster kernel of :func:`semantic_dedup`: one cluster's
+    (id, vec, cluster) table in, (id, cluster, is_dup, dup_of) out.  Rows
+    are compared ``_BLOCK`` at a time against every lower-id row."""
+
+    def prune(table):
+        import pyarrow as pa
+
+        order = np.argsort(table.column(id_col).to_numpy(), kind="stable")
+        taken = table.column(id_col).take(pa.array(order))
+        ids = taken.to_numpy()
+        X = _matrix(table.column("vec"))[order]
+        sq = np.zeros(len(X))
+        for col in X.T:
+            sq += col * col
+        norms = np.sqrt(sq)
+        has = np.zeros(len(X), dtype=bool)
+        first = np.zeros(len(X), dtype=np.int64)
+        for s in range(0, len(X), _BLOCK):
+            e = min(s + _BLOCK, len(X))
+            denom = norms[s:e, None] * norms[None, :e]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.where(denom > 0, _dots(X[s:e], X[:e]) / denom, 0.0)
+            hit = (ids[None, :e] < ids[s:e, None]) & _round_ge(cos, 4, threshold)
+            has[s:e] = hit.any(axis=1)
+            first[s:e] = hit.argmax(axis=1)  # ids ascend: the smallest witness
+        return pa.Table.from_arrays(
+            [
+                taken,
+                table.column("cluster").take(pa.array(order)),
+                pa.array(has),
+                taken.take(pa.array(first, mask=~has)),
+            ],
+            names=[id_col, "cluster", "is_dup", "dup_of"],
+        )
+
+    return prune
+
+
 def semantic_dedup(
     corpus: DataFrame,
     id_col: str,
@@ -414,54 +570,39 @@ def semantic_dedup(
     near-duplicates WITHIN each cluster only — the cross-cluster pair
     space is never touched, which is the entire scale story
     (O(Σ|cluster|²) ≪ O(n²) when k is sized so clusters stay small;
-    at 100 TB pick k ≈ n/10⁴ so the per-cluster quadratic stays bounded,
-    and the within-cluster join below is an equi-join on cluster id —
-    one shuffle).
+    at 100 TB pick k ≈ n/10⁴ so the per-cluster quadratic stays bounded).
 
     Greedy keep-lowest-id convention (matches the paper's "keep one
     random point per ε-ball" with id-order as the deterministic stand-in):
     a document is flagged ``is_dup`` when some LOWER-id doc in the same
-    cluster has cosine ≥ threshold.  Survivor pairs therefore satisfy
-    cos < threshold within every cluster (pytest-asserted).
+    cluster has ``round(cosine, 4) >= threshold``.  Survivor pairs
+    therefore satisfy cos < threshold within every cluster
+    (pytest-asserted).
+
+    Plan: the :func:`kmeans_lite` rounds (the last one only assigns: its
+    means would go unused), one map pass for that assignment, and one
+    shuffle on the cluster id into a per-cluster numpy kernel
+    (``groupBy("cluster").applyInArrow``) that compares the cluster's rows
+    block by block and emits the flags directly — no self-join, no witness
+    aggregate.  Malformed vectors and NULL ids are excluded.
 
     Returns (id, cluster, is_dup, dup_of) — ``dup_of`` the smallest
     witness id (null for survivors).
     """
-    centroids, assigned = kmeans_lite(corpus, id_col, vec_col, k=k, iters=iters)
-    feats = corpus.select(
-        F.col(id_col), as_double_array(vec_col).alias("__v")
-    )
-    clustered = assigned.join(feats, id_col).select(
-        F.col(id_col), "cluster", "__v"
-    )
-    a = clustered.select(
-        F.col(id_col).alias("__id_a"),
-        F.col("cluster").alias("__cl_a"),
-        F.col("__v").alias("__va"),
-    )
-    b = clustered.select(
-        F.col(id_col).alias("__id_b"),
-        F.col("cluster").alias("__cl_b"),
-        F.col("__v").alias("__vb"),
-    )
-    witnesses = (
-        a.join(
-            b,
-            (F.col("__cl_a") == F.col("__cl_b"))
-            & (F.col("__id_a") < F.col("__id_b")),
-        )
-        .where(
-            F.round(cosine(F.col("__va"), F.col("__vb")), 4) >= threshold
-        )
-        .groupBy(F.col("__id_b").alias(id_col))
-        .agg(F.min("__id_a").alias("dup_of"))
+    feats = pin(_features(corpus, id_col, vec_col))
+    centroids, _ = _lloyd(feats, id_col, k, iters - 1)
+    id_type = feats.schema[id_col].dataType
+    schema = StructType(
+        [
+            StructField(id_col, id_type),
+            StructField("cluster", IntegerType()),
+            StructField("is_dup", BooleanType()),
+            StructField("dup_of", id_type),
+        ]
     )
     return (
-        clustered.join(witnesses, id_col, "left")
-        .select(
-            F.col(id_col),
-            "cluster",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            "dup_of",
-        )
+        _nearest(feats, centroids)
+        .where(F.col(id_col).isNotNull())
+        .groupBy("cluster")
+        .applyInArrow(_pruner(id_col, threshold), schema)
     )

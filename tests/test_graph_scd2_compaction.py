@@ -128,6 +128,22 @@ def test_compact_small_files_reduces_file_count(spark, tmp_path):
     assert spark.read.parquet(path).count() == 10_000
 
 
+def test_compact_small_files_splits_packed_reads(spark, tmp_path):
+    """A target below the bytes per read split asks for more files than
+    the read has partitions (Spark packs small files into few splits):
+    compaction must still write ceil(bytes/target) files."""
+    import math
+
+    path = str(tmp_path / "packed")
+    spark.range(10_000).repartition(64).write.parquet(path)
+    table = spark.read.parquet(path)
+    total = table._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    target = math.ceil(total / (2 * table.rdd.getNumPartitions() + 1))
+    n_after = compact_small_files(spark, path, target_file_bytes=target)
+    assert n_after == math.ceil(total / target) > table.rdd.getNumPartitions()
+    assert spark.read.parquet(path).count() == 10_000
+
+
 # --- range-sorted write -------------------------------------------------------
 
 

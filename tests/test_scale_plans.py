@@ -1280,3 +1280,46 @@ def test_lsh_band_self_joins_plan_as_shuffled_hash(spark, sf_oracle, monkeypatch
     assert strategies == {
         name: ["ShuffledHashJoin"] for name in _BAND_JOIN_KEYS
     }, strategies
+
+
+def test_lloyd_round_is_a_fixed_plan(spark, sf_oracle):
+    """One Lloyd round plans the same nodes at k=4 and k=16, and the
+    centroids reach the kernel as an argument, never as an array literal
+    of doubles in the plan (1,024 of them at k=16, d=64)."""
+    import re
+
+    from historic_score_etl_pipeline_spark.operators.similarity import (
+        _features,
+        _lloyd_step,
+    )
+    from historic_score_etl_pipeline_spark.sources.catalog import load_table
+
+    feats = _features(load_table(spark, sf_oracle, "embeddings"), "vec_id", "embedding")
+    vecs = [r["vec"] for r in feats.orderBy("vec_id").limit(16).collect()]
+    plans = {k: _plan(_lloyd_step(feats, vecs[:k])) for k in (4, 16)}
+    nodes = {k: re.findall(r"^\(\d+\) (.+?)$", p, re.M) for k, p in plans.items()}
+    assert nodes[4] == nodes[16] and "MapInArrow" in " ".join(nodes[4]), nodes
+    for p in plans.values():
+        # a folded literal prints as [[-0.0104..., ...]], an unfolded one as array(...)
+        assert not re.search(r"(array\(|\[)\[?-?\d+\.\d", p), p
+
+
+def test_semantic_dedup_job_budget(spark, sf_oracle):
+    """semantic_dedup(iters=2) runs at most iters + 5 Spark jobs, counted
+    in the status store: the initial centroids, one job per Lloyd round
+    and the per-cluster pruning, whatever k is."""
+    from historic_score_etl_pipeline_spark.operators import pins
+    from historic_score_etl_pipeline_spark.operators.similarity import (
+        semantic_dedup,
+    )
+    from historic_score_etl_pipeline_spark.sources.catalog import load_table
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    emb = load_table(spark, sf_oracle, "embeddings")
+    iters = 2
+    n0 = store.jobsList(None).size()
+    rows = semantic_dedup(emb, "vec_id", k=16, iters=iters, threshold=0.35).collect()
+    jobs = store.jobsList(None).size() - n0
+    pins.release_pins()
+    assert len(rows) == 500
+    assert jobs <= iters + 5, jobs
