@@ -116,7 +116,8 @@ def retried_write(
             last_err = e
             if errors is not None:
                 errors.record(f"write attempt {attempt + 1} → {target}", e, batch_id)
-            time.sleep(0.1 * (attempt + 1))
+            if attempt + 1 < attempts:
+                time.sleep(0.1 * (attempt + 1))
     if errors is not None and last_err is not None:
         errors.record(f"write FAILED after {attempts} attempts → {target}", last_err, batch_id)
     return False

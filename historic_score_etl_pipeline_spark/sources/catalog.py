@@ -8,6 +8,19 @@ and partition pruning for free (SURVEY.md §4.1).
 
 At 100 TB these tables would be date/key-partitioned directories; the scan
 API is identical, so the code below does not change — only the paths do.
+
+Schema reuse: ``spark.read.parquet`` runs a one-task footer job to infer
+the schema on every call.  :func:`load_table` remembers the schema Spark
+inferred for a local path and reads an unchanged table with
+``spark.read.schema(cached)``, which runs no job.  The key is the path,
+its data-file set (relative name, size, mtime) and a hash of the
+session's SQL conf, because conf changes what inference returns
+(``spark.sql.parquet.inferTimestampNTZ.enabled`` turns a ``timestamp``
+column into ``timestamp_ntz``).  A rewritten table or any conf change
+infers again; a non-local or unlistable path is read plainly, so Spark's
+own errors are unchanged.  Tables rewritten on every write
+(``sinks/merge.committed``, the streaming dedup index,
+:func:`stage_landing_zone`) stay out: their key would never repeat.
 """
 
 from __future__ import annotations
@@ -16,6 +29,7 @@ import os
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _ensure_conf(spark: SparkSession, key: str, value: str) -> None:
@@ -61,9 +75,53 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# path -> (key, schema Spark inferred under that key); one entry per path,
+# so the cache is bounded by the number of tables read
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _files_stamp(path: str) -> tuple:
+    """(relative name, size, mtime_ns) of every file under ``path``."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out, dirs = [], [path]
+    while dirs:
+        with os.scandir(dirs.pop()) as it:
+            for e in it:
+                if e.is_dir():
+                    dirs.append(e.path)
+                else:
+                    s = e.stat()
+                    out.append((os.path.relpath(e.path, path), s.st_size, s.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that skips schema inference when the
+    table and the session conf are as they were at the last inference."""
+    # a URI may name a remote store, and a relative path resolves against
+    # the JVM's working directory, which need not be this process's
+    if not os.path.isabs(path):
+        return spark.read.parquet(path)
+    try:
+        files = _files_stamp(path)
+    except OSError:
+        return spark.read.parquet(path)
+    # one JVM call; spark.conf.getAll would copy every entry into Python
+    conf = spark._jsparkSession.sessionState().conf().getAllConfs().hashCode()
+    key = (files, conf)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table.  Plain ``spark.read.parquet`` — pushdown-friendly.
+    """Scan one table.  Plain ``spark.read.parquet`` — pushdown-friendly;
+    an unchanged table reuses its inferred schema (module docstring).
 
     ``events.parquet`` is written with nanosecond timestamps, which the
     vectorized parquet reader rejects; we read nanos as long (runtime conf)
@@ -93,7 +151,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         _ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         from pyspark.sql import functions as F
 
         ts_type = dict(df.dtypes).get("ts")
@@ -109,7 +167,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # downstream unix_micros()/cast-to-bigint call site requires.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

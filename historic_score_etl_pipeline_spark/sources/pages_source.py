@@ -6,9 +6,13 @@ app/ref_utilities.py:65-81).  The engine models the landed page dumps as a
 real Spark table via the PySpark 4 DataSource API, so the raw token
 streams join the catalog instead of living in driver-side Python:
 
-* one ``InputPartition`` per page file — a 1000-executor cluster parses
-  pages in parallel, the Spark-native replacement for the reference's
-  serial per-league loop (app/team_utilities.py:376);
+* the sorted page files are packed into splits the way Spark packs small
+  files (``MAX_SPLIT_BYTES`` per split, ``OPEN_COST_BYTES`` charged per
+  file): a night's few small dumps are one Python task, because each
+  Python task wave carries a fixed worker start-up cost that dwarfs
+  parsing them, while a landing zone larger than one split still parses
+  in parallel — the Spark-native replacement for the reference's serial
+  per-league loop (app/team_utilities.py:376);
 * record parsing runs inside the executors (the reference's tokenizer
   semantics: 6-field records, garbage rows dropped — the arity filter of
   app/team_utilities.py:417-420);
@@ -46,6 +50,10 @@ PAGE_SCHEMA = (
 
 _N_FIELDS = 6
 
+# the defaults of spark.sql.files.maxPartitionBytes / openCostInBytes
+MAX_SPLIT_BYTES = 128 * 1024 * 1024
+OPEN_COST_BYTES = 4 * 1024 * 1024
+
 
 def parse_page_tokens(tokens: Sequence[str]) -> Iterator[tuple]:
     """The reference's record assembly (app/team_utilities.py:76-88) made
@@ -68,8 +76,8 @@ def parse_page_tokens(tokens: Sequence[str]) -> Iterator[tuple]:
 
 
 class _PagePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+    def __init__(self, paths: list[str]):
+        self.paths = paths
 
 
 class MatchPagesReader(DataSourceReader):
@@ -92,26 +100,43 @@ class MatchPagesReader(DataSourceReader):
                 yield f
 
     def partitions(self) -> list[_PagePartition]:
+        """Sorted page files packed in order: a file joins the current
+        split unless it would push the split past ``MAX_SPLIT_BYTES``;
+        each file also charges ``OPEN_COST_BYTES`` (Spark's
+        ``FilePartition`` packing)."""
         files = sorted(
             os.path.join(self.path, f)
             for f in os.listdir(self.path)
             if f.endswith(".txt")
         )
-        return [_PagePartition(p) for p in files]
+        splits: list[_PagePartition] = []
+        current: list[str] = []
+        size = 0
+        for p in files:
+            n = os.path.getsize(p)
+            if current and size + n > MAX_SPLIT_BYTES:
+                splits.append(_PagePartition(current))
+                current, size = [], 0
+            current.append(p)
+            size += n + OPEN_COST_BYTES
+        if current:
+            splits.append(_PagePartition(current))
+        return splits
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
-        with open(partition.path, encoding="utf-8") as fh:
-            tokens = fh.read().replace("\n", ",").split(",")  # C1 tokenizer
-        for row in parse_page_tokens(tokens):
-            league = row[1]
-            if self._league_eq is not None and league != self._league_eq:
-                continue
-            if (
-                self._league_contains is not None
-                and self._league_contains not in league
-            ):
-                continue
-            yield row
+        for path in partition.paths:
+            with open(path, encoding="utf-8") as fh:
+                tokens = fh.read().replace("\n", ",").split(",")  # C1 tokenizer
+            for row in parse_page_tokens(tokens):
+                league = row[1]
+                if self._league_eq is not None and league != self._league_eq:
+                    continue
+                if (
+                    self._league_contains is not None
+                    and self._league_contains not in league
+                ):
+                    continue
+                yield row
 
 
 class MatchPagesStreamReader(SimpleDataSourceStreamReader):

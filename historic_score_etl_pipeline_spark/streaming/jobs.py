@@ -480,7 +480,12 @@ def run_incremental_dedup(
                 # idempotent — the current batch never collides with itself,
                 # and a full-checkpoint replay reproduces the original flagged
                 # output exactly.  Id self-pairs are dropped as a second guard.
-                idx = spark.read.parquet(index_dir).where(
+                # The index is this loop's own output, so its schema is
+                # known: declaring it skips a footer-inference job.
+                idx_schema = _Struct(
+                    probes.schema.fields + [_Field("batch_id", _Long())]
+                )
+                idx = spark.read.schema(idx_schema).parquet(index_dir).where(
                     F.col("batch_id").cast("long") < F.lit(batch_id)
                 )
                 flagged = band_probe_join(probes, idx, id_col).unionByName(flagged)

@@ -9,6 +9,7 @@ operator can be verified locally before the driver ever sees it.
 from __future__ import annotations
 
 import datetime as _dt
+import hashlib
 import math
 from dataclasses import dataclass
 
@@ -73,6 +74,12 @@ def canonical_rows(df: pd.DataFrame) -> list[str]:
         for _, row in df[cols].iterrows()
     ]
     return sorted(rows)
+
+
+def rows_digest(df: pd.DataFrame) -> str:
+    """sha256 of :func:`canonical_rows` (16 hex digits): the same for the
+    same rows in any row or column order."""
+    return hashlib.sha256("\n".join(canonical_rows(df)).encode()).hexdigest()[:16]
 
 
 @dataclass
@@ -227,7 +234,11 @@ def run_parity(spark, sf_dir: str, names: list[str] | None = None) -> list[Parit
                 results.append(ParityResult(name, False, viol))
             else:
                 results.append(
-                    ParityResult(name, True, f"rows-only: {len(sdf)} rows")
+                    ParityResult(
+                        name,
+                        True,
+                        f"rows-only: {len(sdf)} rows, sha256 {rows_digest(sdf)}",
+                    )
                 )
             continue
         try:

@@ -77,8 +77,30 @@ def test_source_reads_all_pages_in_parallel(spark, landing):
         ("14.08. 19:30", "serie-b", "Como", "Pisa", 3, 2),
         ("15.08. 17:00", "eredivisie", "Ajax", "PSV", 1, 4),
     }
-    # one partition per page file — the unit of cluster parallelism
-    assert df.rdd.getNumPartitions() == 3
+    # small files pack into one split (MAX_SPLIT_BYTES / OPEN_COST_BYTES)
+    assert df.rdd.getNumPartitions() == 1
+
+
+def test_partitions_pack_sorted_files_up_to_the_budget(landing, monkeypatch):
+    """Files past the split budget go to further splits, in name order."""
+    import os
+
+    from historic_score_etl_pipeline_spark.sources import pages_source
+
+    a, b, c = (os.path.join(landing, f) for f in ("a.txt", "b.txt", "c.txt"))
+    reader = MatchPagesReader({"path": landing})
+    monkeypatch.setattr(pages_source, "OPEN_COST_BYTES", 0)
+    monkeypatch.setattr(
+        pages_source, "MAX_SPLIT_BYTES", os.path.getsize(a) + os.path.getsize(b)
+    )
+    assert [p.paths for p in reader.partitions()] == [[a, b], [c]]
+    # a file over the budget still gets a split of its own
+    monkeypatch.setattr(pages_source, "MAX_SPLIT_BYTES", 1)
+    assert [p.paths for p in reader.partitions()] == [[a], [b], [c]]
+    # the open cost alone can close a split
+    monkeypatch.setattr(pages_source, "MAX_SPLIT_BYTES", 1000)
+    monkeypatch.setattr(pages_source, "OPEN_COST_BYTES", 1000)
+    assert [p.paths for p in reader.partitions()] == [[a], [b], [c]]
 
 
 def test_source_filter_pushdown(spark, landing):
