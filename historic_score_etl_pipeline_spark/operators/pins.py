@@ -27,7 +27,9 @@ raw call this module now owns:
    .setCheckpointDir(...)``: every pin then uses a RELIABLE checkpoint
    (HDFS/object-store blocks, recomputable after executor loss) at the
    cost of a write to stable storage.  Local runs and the bench keep the
-   fast path.
+   fast path.  Reliable pins are registered like local ones, and
+   :func:`release_pins` also deletes their ``rdd-<id>`` checkpoint
+   directories, which would otherwise stay for the life of the session.
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ import os
 import threading
 import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 _LOCK = threading.Lock()
@@ -52,17 +55,21 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     SparkContext, pin warns and falls back to ``localCheckpoint``; any
     other reliable-checkpoint failure propagates.
     """
+    reliable = False
     if os.environ.get("HSEP_RELIABLE_CHECKPOINT"):
         sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isDefined():
-            return df.checkpoint(eager=eager)
-        warnings.warn(
-            "HSEP_RELIABLE_CHECKPOINT is set but the SparkContext has no "
-            "checkpoint dir; pinning with a non-replicated localCheckpoint",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    cp = df.localCheckpoint(eager=eager)
+        reliable = sc._jsc.sc().getCheckpointDir().isDefined()
+        if not reliable:
+            warnings.warn(
+                "HSEP_RELIABLE_CHECKPOINT is set but the SparkContext has no "
+                "checkpoint dir; pinning with a non-replicated localCheckpoint",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+    if reliable:
+        cp = df.checkpoint(eager=eager)
+    else:
+        cp = df.localCheckpoint(eager=eager)
     try:
         handle = cp._jdf.queryExecution().logical().rdd()
         with _LOCK:
@@ -81,7 +88,7 @@ def unpin(df: DataFrame) -> None:
     """
     try:
         handle = df._jdf.queryExecution().logical().rdd()
-        handle.unpersist(False)
+        _drop(handle)
         with _LOCK:
             for i, h in enumerate(_PINNED):
                 if h.equals(handle):
@@ -103,11 +110,27 @@ def release_pins() -> int:
         handles, _PINNED[:] = _PINNED[:], []
     for h in handles:
         try:
-            h.unpersist(False)
+            _drop(h)
             released += 1
         except Exception:
             pass
     return released
+
+
+def _drop(handle) -> None:
+    """Unpersist a pinned RDD and delete its reliable checkpoint files.
+
+    A local checkpoint has no checkpoint file; a reliable one keeps its
+    ``rdd-<id>`` directory until deleted here, through the path's Hadoop
+    ``FileSystem``.
+    """
+    handle.unpersist(False)
+    cp_file = handle.getCheckpointFile()
+    if cp_file.isDefined():
+        jvm = SparkContext._jvm
+        path = jvm.org.apache.hadoop.fs.Path(cp_file.get())
+        path.getFileSystem(handle.context().hadoopConfiguration()).delete(
+            path, True)
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

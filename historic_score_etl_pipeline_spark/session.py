@@ -5,9 +5,22 @@ same code lands well on a 1000-executor cluster: AQE owns runtime shuffle
 partitioning (coalesce + skew-split), broadcast threshold is explicit, and
 Arrow is on for the few Pandas-UDF operators.
 
+Two confs concern the Python workers:
+
+* ``spark.python.daemon.module`` names ``worker_daemon``, so Python workers
+  fork from a daemon in which a zip importer re-reads pyspark.zip or the
+  spark-core jar only when the archive changed, instead of before every
+  task (~0.2 s per Python task on CPython 3.11).
+* ``spark.executorEnv.PYTHONPATH`` is the package's parent directory, so
+  workers import that daemon and the engine's Arrow kernels from where
+  this driver imported them, whatever the JVM's cwd is.  Spark puts the
+  entry after its own paths and before the driver process's
+  ``PYTHONPATH``.
+
 Note: library code in this package must NOT depend on these confs — the
-driver harness calls our queries with its own session.  The factory exists
-for our own tests, bench.py, and interactive use.
+driver harness calls our queries with its own session, whose workers run
+the stock ``pyspark.daemon``.  The factory exists for our own tests,
+bench.py, and interactive use.
 """
 
 from __future__ import annotations
@@ -15,6 +28,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "historic-score-etl-pipeline-spark",
@@ -48,5 +64,9 @@ def get_spark(app_name: str = "historic-score-etl-pipeline-spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers: see the module docstring.
+        .config("spark.python.daemon.module",
+                "historic_score_etl_pipeline_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()

@@ -67,6 +67,31 @@ def test_reliable_checkpoint_without_dir_warns_and_pins_locally(
     assert pins.release_pins() == 1
 
 
+def test_reliable_pin_is_released_with_its_checkpoint_files(
+    spark, monkeypatch, tmp_path
+):
+    """A reliable pin is registered like a local one: release unpersists
+    it and deletes its ``rdd-*`` checkpoint directory."""
+    from historic_score_etl_pipeline_spark.operators import pins
+
+    jsc = spark.sparkContext._jsc.sc()
+    assert not jsc.getCheckpointDir().isDefined()
+    monkeypatch.setenv("HSEP_RELIABLE_CHECKPOINT", "1")
+    pins.release_pins()
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    try:
+        cp = pins.pin(spark.range(100).select("id"), eager=True)
+        assert cp.count() == 100
+        rdd_dirs = list(tmp_path.glob("*/rdd-*"))
+        assert len(rdd_dirs) == 1
+        assert pins.release_pins() == 1
+        assert not rdd_dirs[0].exists()
+    finally:
+        # the session fixture is shared: leave it without a checkpoint dir
+        getattr(jsc, "checkpointDir_$eq")(spark._jvm.scala.Option.empty())
+    assert not jsc.getCheckpointDir().isDefined()
+
+
 def test_connected_components_releases_superseded_rounds(spark):
     """After a distributed CC run, only O(1) pins may remain (the final
     label table), not one per propagation round."""
